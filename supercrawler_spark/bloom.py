@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .crawler import local_df
+
 
 BLOOM_SCHEMA = T.StructType([
     T.StructField("pid", T.IntegerType()),
@@ -142,7 +144,7 @@ class PartitionedBloom:
     def _table_or_empty(self, spark: SparkSession) -> DataFrame:
         if self._table is not None:
             return self._table
-        return spark.createDataFrame([], schema=_TABLE_SCHEMA)
+        return local_df(spark, [], _TABLE_SCHEMA)
 
     # -- build ---------------------------------------------------------------
     def add(self, spark: SparkSession, df: DataFrame, col: str = "url") -> int:
@@ -200,9 +202,13 @@ class PartitionedBloom:
 
     # -- capacity planning ---------------------------------------------------
     def fp_rate_estimate(self) -> float:
-        """Analytic false-positive rate at the current fill, assuming
+        """Analytic false-positive rate from the key count alone, assuming
         hash-uniform spread over partitions: (1 - e^{-k·n_p/m})^k with
-        n_p = n_added / P. At n >> capacity the filter saturates and the
+        n_p = n_added / P. Plain arithmetic over scalars the filter
+        already holds — it reads no bitset and launches no Spark job, so
+        the crawl loop can consult it every cycle for free (measuring the
+        set-bit fraction instead would scan all P bitsets each time).
+        At n >> capacity the filter saturates and the
         prefilter silently degrades to the exact path (every candidate
         flags maybe-seen); the crawl loop watches this estimate and
         rebuilds at 2x partitions/bits when it crosses
@@ -419,26 +425,6 @@ class PartitionedBloom:
             bits[int(r["pid"])] = np.frombuffer(r["bitset"], dtype=np.uint8)
         obj._bits_local = bits
         return obj
-
-    def fp_rate_estimate(self) -> float:
-        """Expected false-positive rate from current fill factor, computed
-        distributedly (per-row popcount fraction, averaged over all P
-        partitions — absent pids are zero-fill)."""
-        if self._table is None:
-            if self._bits_local is not None:  # from_pandas-restored
-                return float(np.unpackbits(self._bits_local).mean()) ** self.k
-            return 0.0
-
-        @F.pandas_udf(T.DoubleType())
-        def fill_frac(b: pd.Series) -> pd.Series:
-            return pd.Series([
-                float(np.unpackbits(np.frombuffer(x, dtype=np.uint8)).mean())
-                if x is not None else 0.0 for x in b])
-
-        row = (self._table
-               .agg(F.sum(fill_frac(F.col("bitset"))).alias("s")).first())
-        s = float(row["s"]) if row["s"] is not None else 0.0
-        return (s / self.P) ** self.k
 
 
 class CuckooFilter:
@@ -680,7 +666,7 @@ class PartitionedCuckoo:
     def _table_or_empty(self, spark: SparkSession) -> DataFrame:
         if self._table is not None:
             return self._table
-        return spark.createDataFrame([], schema=CUCKOO_TABLE_SCHEMA)
+        return local_df(spark, [], CUCKOO_TABLE_SCHEMA)
 
     def _mutate(self, spark: SparkSession, df: DataFrame, col: str,
                 op: str) -> int:

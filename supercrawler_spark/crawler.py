@@ -46,28 +46,14 @@ from __future__ import annotations
 
 import math
 import os
-import time
 from dataclasses import dataclass, field
 
-_PROFILE = bool(os.environ.get("SC_PROFILE"))
-
-
-class _Phase:
-    """Per-cycle phase timer (enabled via SC_PROFILE=1)."""
-
-    def __init__(self):
-        self.t = time.time()
-
-    def mark(self, label: str) -> None:
-        if _PROFILE:
-            now = time.time()
-            print(f"    [{label}] {now - self.t:.2f}s", flush=True)
-            self.t = now
-
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import functions as SF
 from . import urls as urls_mod
@@ -146,17 +132,18 @@ def plan_str(df: DataFrame) -> str:
 
 
 def local_df(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
-    """Small driver-side DataFrame from dict rows, Arrow-independent.
+    """Small local DataFrame from dict rows, built as a ``pyarrow.Table``.
 
-    Builds tuples in schema order instead of going through pandas: a pandas
-    frame coerces a None+int column to float64, which a session WITHOUT
-    Arrow enabled rejects for IntegerType (FIELD_DATA_TYPE_UNACCEPTABLE —
-    the round-1 crawl_e2e driver failure). Tuples keep int/None as objects,
-    so the engine behaves identically under any session config.
+    An Arrow table is decoded by the JVM (one Arrow stream shipped once), so
+    evaluating the frame runs no Python task. A frame built from tuples is a
+    ``PythonRDD`` instead: every job that reads it — each broadcast, join and
+    commit of a cycle — forks a Python worker per partition to re-decode it.
+    The table is typed by the Spark schema itself, so None survives in int
+    columns (a pandas frame would coerce it to float64), and the path does not
+    depend on ``spark.sql.execution.arrow.pyspark.enabled``.
     """
-    names = [f.name for f in schema.fields]
-    return spark.createDataFrame([tuple(r[n] for n in names) for r in rows],
-                                 schema=schema)
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
 
 
 @dataclass
@@ -677,9 +664,7 @@ class SparkCrawler:
         Crawler.js:196-201)."""
         cfg = self.config
         stats = CycleStats(cycle_id=self.cycle_id)
-        ph = _Phase()
         frame, n_popped = self._pop_batch()
-        ph.mark('pop')
         stats.popped = n_popped
         if not n_popped:
             stats.events.append(("urllistempty", None))
@@ -711,7 +696,6 @@ class SparkCrawler:
                           .agg(F.min("batch_idx").alias("first_idx"))
                           .orderBy("first_idx").collect())]
             robots_inserts = self._refresh_robots(key_firsts)
-        ph.mark('robots')
 
         batch_df = frame.select(
             "batch_idx", "url",
@@ -727,6 +711,10 @@ class SparkCrawler:
                 "robots_allowed",
                 F.when(F.col("robots_req_err") | F.col("robots_deny_status").isNotNull(), F.lit(None))
                  .otherwise(allowed_udf(F.col("url"), F.col("robots_txt"))))
+            # pin the robots verdicts: the fetch join and the outcome fold
+            # both read batch_df, and each would otherwise run the Python
+            # UDF again
+            batch_df = batch_df.localCheckpoint(eager=True)
         else:
             batch_df = (batch_df
                         .withColumn("robots_txt", F.lit(None).cast("string"))
@@ -806,7 +794,7 @@ class SparkCrawler:
                 stats.page_links.setdefault(r["batch_idx"], []).append(r["url"])
 
         # --- per-row outcome fold (error taxonomy, Crawler.js:283-314) ------
-        # all inputs are batch-sized: batch_df (local), found's status
+        # all inputs are batch-sized: batch_df (pinned), found's status
         # columns (cached, bodies pruned), handler errors (cached)
         results = (batch_df
                    .join(F.broadcast(found.select("batch_idx", "f_status",
@@ -853,14 +841,12 @@ class SparkCrawler:
         # it as DataFrame lineage; the driver collects only the per-cycle
         # scalar counters. Full rows cross to the driver ONLY when
         # collect_events asks for the facade's per-URL event payloads.
-        ph.mark('plan2')
         results = (results
                    .select("batch_idx", "url", "num_errors", "status_out",
                            "error_code", "error_message", "f_location")
                    .persist())
         if cfg.collect_events:
             stats.results = [r.asDict() for r in results.collect()]
-        ph.mark('results_collect')
 
         # --- ordered insert list: robots enqueues then discovered links -----
         # (robots URL enqueued BEFORE the page's own links — Crawler.js:463-465)
@@ -876,9 +862,7 @@ class SparkCrawler:
                 ])).withColumn("source_order", F.lit(0))
             links_all = robots_links.unionByName(links_all)
 
-        ph.mark('plan')
         n_links = links_all.count()
-        ph.mark('links_count')
         stats.links_found = int(n_links) - len(robots_inserts)
 
         if n_links:
@@ -1019,7 +1003,6 @@ class SparkCrawler:
                         else frame.select("url")
                                   .unionByName(new_rows.select("url")))
         self._apply_changes(changes, keys=changed_keys)
-        ph.mark('checkpoint')
         # the delta checkpoint materialized new_rows — read back the new max
         # seq from the (small) delta instead of scanning the frontier
         new_max = self._delta.agg(F.max("seq").alias("m")).collect()[0]["m"]
@@ -1031,7 +1014,6 @@ class SparkCrawler:
         if self._bloom is not None and n_new and new_rows is not None:
             self._bloom.add(self.spark, new_rows.select("url"))
             self._maybe_rebuild_bloom()
-        ph.mark('seq_agg')
         kernel_out.unpersist()
         found.unpersist()
         if new_rows is not None:
@@ -1270,9 +1252,8 @@ class SparkCrawler:
             else:
                 missing.append(h)
         if missing and self._host_delay_base is not None:
-            kdf = self.spark.createDataFrame(
-                [(h,) for h in missing],
-                schema=T.StructType([T.StructField("host", T.StringType())]))
+            kdf = local_df(self.spark, [{"host": h} for h in missing],
+                           T.StructType([T.StructField("host", T.StringType())]))
             rows = self._host_delay_base.join(F.broadcast(kdf), "host").collect()
             for r in rows:
                 v = (float(r["delay"]), float(r["last_update"]))
@@ -1314,9 +1295,8 @@ class SparkCrawler:
             else:
                 missing.append(k)
         if missing and self._robots_base is not None:
-            kdf = self.spark.createDataFrame(
-                [(k,) for k in set(missing)],
-                schema=T.StructType([T.StructField("robots_key", T.StringType())]))
+            kdf = local_df(self.spark, [{"robots_key": k} for k in set(missing)],
+                           T.StructType([T.StructField("robots_key", T.StringType())]))
             rows = self._robots_base.join(F.broadcast(kdf), "robots_key").collect()
             for r in rows:
                 entry = _RobotsEntry(r["robots_txt"], r["deny_status"],
@@ -1394,9 +1374,8 @@ class SparkCrawler:
             current = list(set(pending.values()))
             # broadcast semi-join instead of a giant In() predicate
             # (isin with 1000+ hosts is a codegen-hostile expression)
-            want_df = self.spark.createDataFrame(
-                [(u,) for u in current], schema=T.StructType(
-                    [T.StructField("url", T.StringType())]))
+            want_df = local_df(self.spark, [{"url": u} for u in current],
+                               T.StructType([T.StructField("url", T.StringType())]))
             rows = (self.web_pages
                     .join(F.broadcast(want_df), "url")
                     .select("url", "status_code", "body", "location").collect())

@@ -366,6 +366,26 @@ def test_bloom_fpr_estimate_and_grown_empty(spark):
         f.release()
 
 
+def test_fpr_estimate_is_analytic_and_runs_no_job(spark):
+    """fp_rate_estimate is the closed form over the filter's scalars,
+    (1 - e^{-k·n/(P·m)})^k: the crawl consults it every cycle, so it must
+    not scan the bitsets (no Spark job before vs after)."""
+    import math
+
+    bloom = PartitionedBloom(partitions=4, capacity=1 << 12)
+    urls = spark.createDataFrame(
+        [(f"http://h{i % 5}.example/p{i}",) for i in range(5000)], ["url"])
+    assert bloom.add(spark, urls, "url") == 5000
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup())
+    est = bloom.fp_rate_estimate()
+    assert set(tracker.getJobIdsForGroup()) == jobs_before
+    want = (1 - math.exp(-bloom.k * bloom.n_added
+                         / (bloom.P * bloom.m))) ** bloom.k
+    assert est == pytest.approx(want, rel=1e-12)
+    assert 0.0 < est < 1.0
+
+
 def test_engine_rebuilds_saturated_bloom(spark, tmp_path):
     """Seeding far past the configured bloom capacity must trigger the 2x
     rebuild loop inside the engine, with the FPR estimate landing under

@@ -61,6 +61,29 @@ def test_merge_delta_is_batch_sized(cycle_plans):
     assert "SortMergeJoin" not in p
     assert "CartesianProduct" not in p
 
+
+@pytest.fixture(scope="module")
+def robots_cycle_plans(spark):
+    """The same cycle with robots checks on."""
+    seeds, web, _ = fixtures.make_web_fixture(n_hosts=2, pages_per_host=3)
+    cr = SparkCrawler(spark, spark.createDataFrame(web), tempfile.mkdtemp(),
+                      CrawlConfig(budget=6, order_mode="random"))
+    cr.seed(sorted(set(seeds["url"])))
+    sink = {}
+    cr.plan_sink = sink
+    stats = cr.run_cycle()
+    assert stats.popped > 0
+    return sink
+
+
+def test_robots_udf_runs_once_in_the_pinned_batch(robots_cycle_plans):
+    """The robots-evaluated batch is pinned as soon as it is built, so the
+    fetch join reads stored verdicts and never re-runs the Python UDF."""
+    p = robots_cycle_plans["fetch_join"]
+    assert "BroadcastHashJoin" in p, p
+    assert "ArrowEvalPython" not in p, p
+
+
 @pytest.fixture(scope="module")
 def http_cycle_plans(spark):
     """Same cycle, fetch_mode="http" through the mapInPandas HTTP kernel

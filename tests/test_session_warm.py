@@ -56,3 +56,16 @@ def test_warm_session_disabled_by_env(monkeypatch):
     from supercrawler_spark.session import _warm_session
     monkeypatch.setenv("SPARK_GRAFT_WARM", "0")
     _warm_session(None)  # would raise if it touched the (None) session
+
+
+def test_default_driver_memory_fits_the_host(monkeypatch):
+    """Without SPARK_DRIVER_MEM the JVM heap is a quarter of physical
+    RAM, clamped to 1-8 GiB, so a small host never grants the JVM more
+    heap than it can back."""
+    from supercrawler_spark.session import _default_driver_memory
+    page = 4096
+    for ram_gib, want in ((2, "1g"), (16, "4g"), (15.5, "3g"), (256, "8g")):
+        pages = int(ram_gib * (1 << 30)) // page
+        monkeypatch.setattr(os, "sysconf", lambda name, p=pages: {
+            "SC_PAGE_SIZE": page, "SC_PHYS_PAGES": p}[name])
+        assert _default_driver_memory() == want, ram_gib
