@@ -101,38 +101,11 @@ def bench_size(spark, n: int) -> dict:
             "all_cycles_s": [round(t, 3) for t in times]}
 
 
-def _cal() -> float:
-    """Parallel raw-CPU grant right now (8->32-way scaling, 1=perfect):
-    the same steal gauge the scaling protocol uses, so a single hypervisor
-    burst can't masquerade as super-linear frontier cost (r4 recorded
-    1.247 from one 9.5 s stolen cycle vs 0.94 quiet-window)."""
-    import multiprocessing as mp
-
-    def rate(n):
-        with mp.Pool(n) as p:
-            t0 = time.time()
-            res = p.map(_burn, range(n))
-            return sum(res) / (time.time() - t0)
-
-    r8, r32 = rate(8), rate(32)
-    return round(r32 / r8 / 4.0, 3)
-
-
-def _burn(_):
-    t0 = time.time()
-    x = 0
-    while time.time() - t0 < 1.0:
-        x += 1
-    return x
-
-
 def main():
     sizes = [int(float(a)) for a in sys.argv[1:]] or [1_000_000, 10_000_000]
     spark = get_spark("frontier-scale-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    cal_before = _cal()
     out = [bench_size(spark, n) for n in sizes]
-    cal_after = _cal()
     ratio = (out[-1]["median_cycle_s"] / out[0]["median_cycle_s"]
              if len(out) > 1 and out[0]["median_cycle_s"] > 0 else None)
     # min-cycle ratio: each size's least-stalled cycle — steal-robust
@@ -148,8 +121,6 @@ def main():
         "min_cycle_time_ratio": round(min_ratio, 3) if min_ratio else None,
         "frontier_size_ratio": size_ratio,
         "sublinear": bool(ratio and size_ratio and ratio < size_ratio / 2),
-        "calibration": min(cal_before, cal_after),
-        "cal_before": cal_before, "cal_after": cal_after,
     }))
 
 

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 def main():
     n_links = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-    master = sys.argv[2] if len(sys.argv) > 2 else "local[32]"
+    master = sys.argv[2] if len(sys.argv) > 2 else None
     from supercrawler_spark.crawler import CrawlConfig, SparkCrawler
     from supercrawler_spark.session import get_spark
 
@@ -84,7 +84,8 @@ def main():
     assert identical, "seq assignment mismatch between paths"
 
     print(json.dumps({
-        "mode": "seq_assign", "n_links": n_links, "master": master,
+        "mode": "seq_assign", "n_links": n_links,
+        "master": spark.sparkContext.master,
         "distributed_s": t_dist, "flat_window_s": t_flat,
         "max_rows_single_partition_distributed": max_part,
         "partitions": int(stats["parts"]),

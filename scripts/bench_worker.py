@@ -1,17 +1,12 @@
-"""Bench worker — runs one bench mode in its own process/SparkSession so
-parallelism levels are isolated. Prints ONE JSON line.
+"""Seen-set dedup micro-bench: exact anti-join vs the Bloom prefilter,
+each mode in its own process/SparkSession. Prints ONE JSON line.
 
 Modes:
-  crawl <master>   — end-to-end crawl throughput over the bench web
-                     (frontier URLs scheduled+fetched per second)
-  cycle <master>   — the micro-cycle's distributed core at production-like
-                     batch size: parse UDTF → canonicalize → anti-join seen →
-                     per-host window rank. This is the stage that must scale
-                     with executors; driver-side cycle fixed costs (~1-2 s)
-                     amortize at production budgets.
+  dedup <master>        — 2M seen x 1M candidates (corpus-sized candidates)
+  dedup_scale <master>  — 10M seen x 200k candidates (one cycle's links);
+                          the 10M-row seen set is cached under $SC_BENCH_DIR
 
-Input parquet is pre-generated by bench.py under /tmp/sc_bench so both
-parallelism levels read identical bytes.
+Usage: python scripts/bench_worker.py dedup local[4]
 """
 
 from __future__ import annotations
@@ -27,118 +22,6 @@ sys.path.insert(0, REPO)
 BENCH_DIR = os.environ.get("SC_BENCH_DIR", "/tmp/sc_bench")
 
 
-def bench_crawl(master: str) -> dict:
-    import tempfile
-
-    from supercrawler_spark.crawler import CrawlConfig, SparkCrawler
-    from supercrawler_spark.session import get_spark
-
-    spark = get_spark("bench-crawl", master=master)
-    spark.sparkContext.setLogLevel("ERROR")
-    web = spark.read.parquet(os.path.join(BENCH_DIR, "web_pages")).persist()
-    web.count()  # the static synthetic web stays cached across cycles
-    seeds = [r["url"] for r in
-             spark.read.parquet(os.path.join(BENCH_DIR, "seeds"))
-             .orderBy("seq").collect()]
-    # collect_events=False: the production posture — no per-URL driver
-    # round-trip of the popped batch or the outcome fold (O13)
-    cfg = CrawlConfig(budget=4000, order_mode="random", per_host_cap=16,
-                      checkpoint_every=1000, use_bloom=False,
-                      collect_events=False)
-    cr = SparkCrawler(spark, web, tempfile.mkdtemp(), cfg)
-    cr.seed(seeds)
-    t0 = time.time()
-    crawled = 0
-    cycles = 0
-    while cycles < 5:
-        stats = cr.run_cycle()
-        if stats.popped == 0:
-            break
-        crawled += stats.popped
-        cycles += 1
-    wall = time.time() - t0
-    return {"mode": "crawl", "master": master, "crawled": crawled,
-            "cycles": cycles, "wall_s": round(wall, 2),
-            "urls_per_sec": round(crawled / wall, 1)}
-
-
-def bench_cycle(master: str) -> dict:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from supercrawler_spark.crawler import _make_handler_kernel
-    from supercrawler_spark.handlers import default_registry
-    from supercrawler_spark.session import get_spark
-
-    os.makedirs("/dev/shm/spark-local", exist_ok=True)
-    spark = get_spark("bench-cycle", master=master, extra_conf={
-        # fine-grained input splits: enough task waves per core that one
-        # straggler doesn't dominate wall time
-        "spark.sql.files.maxPartitionBytes": "2m",
-        "spark.sql.files.openCostInBytes": "0",
-        "spark.sql.adaptive.enabled": "false",
-        # the sandbox VM's disk has noisy-neighbor stalls; keep the measured
-        # job CPU-bound: shuffle to tmpfs, inputs cached in memory below
-        "spark.local.dir": "/dev/shm/spark-local",
-    })
-    spark.sparkContext.setLogLevel("ERROR")
-    web = spark.read.parquet(os.path.join(BENCH_DIR, "web_pages_big"))
-    # SC_CYCLE_SCALE=k replicates the corpus k-fold (distinct urls per
-    # copy, so parse/dedup/join work scales too): the larger single job
-    # amortizes the ~1 s of fixed per-job driver/action overhead that
-    # otherwise costs ~10% efficiency at 4N on short walls, and averages
-    # over the host's burst windows (BENCH/BASELINE.md §2)
-    scale = int(os.environ.get("SC_CYCLE_SCALE", "1"))
-    if scale > 1:
-        from functools import reduce
-        copies = [web.withColumn("url", F.concat(F.lit(f"c{i}-"), F.col("url")))
-                  for i in range(scale)]
-        web = reduce(lambda a, b: a.unionByName(b), copies)
-    web = web.persist()
-    seen = spark.read.parquet(os.path.join(BENCH_DIR, "seen_big")).persist()
-    seen.count()
-    n_pages = web.count()  # inputs fully cached before any timed run
-    from supercrawler_spark.crawler import _KERNEL_OUT_SCHEMA
-
-    def run_once() -> tuple[float, int]:
-        t0 = time.time()
-        kernel_in = web.filter(F.col("status_code") < 400).select(
-            F.monotonically_increasing_id().alias("batch_idx"),
-            "url",
-            F.col("status_code").alias("f_status"),
-            F.col("content_type").alias("f_content_type"),
-            F.col("location").alias("f_location"),
-            F.col("body").alias("f_body"))
-        kernel = _make_handler_kernel(default_registry())
-        links = (kernel_in.mapInPandas(kernel, schema=_KERNEL_OUT_SCHEMA)
-                 .filter(F.col("link").isNotNull())
-                 .select(F.col("link").alias("url"), "batch_idx", "link_idx"))
-        w_dup = Window.partitionBy("url").orderBy("batch_idx", "link_idx")
-        unique = (links.withColumn("_rn", F.row_number().over(w_dup))
-                       .filter(F.col("_rn") == 1).drop("_rn"))
-        new = unique.join(seen, "url", "left_anti")
-        ranked = new.withColumn(
-            "host", F.lower(F.parse_url(F.col("url"), F.lit("HOST"))))
-        w = Window.partitionBy("host").orderBy("batch_idx", "link_idx")
-        popped = (ranked.withColumn("rank", F.row_number().over(w))
-                        .filter(F.col("rank") <= 64))
-        n = popped.count()
-        return time.time() - t0, n
-
-    # untimed warmup + best-of-2: the sandbox VM has noisy-neighbor variance;
-    # best-of is the stable estimator of machine capability at each level
-    run_once()
-    walls, n_selected = [], 0
-    for _ in range(2):
-        wall, n_selected = run_once()
-        walls.append(wall)
-    wall = min(walls)
-    return {"mode": "cycle", "master": master, "pages": int(n_pages),
-            "selected": int(n_selected), "wall_s": round(wall, 2),
-            "walls_s": [round(x, 2) for x in walls],
-            "pages_per_sec": round(n_pages / wall, 1)}
-
-
 def bench_dedup(master: str) -> dict:
     """Seen-set dedup micro-bench (BASELINE.md secondary metric): exact
     anti-join vs Bloom-prefiltered dedup at 2M seen x 1M candidates
@@ -149,10 +32,10 @@ def bench_dedup(master: str) -> dict:
 
     spark = get_spark("bench-dedup", master=master)
     spark.sparkContext.setLogLevel("ERROR")
-    seen = spark.read.parquet(os.path.join(BENCH_DIR, "seen_big")).persist()
+    urls = make_seed_frontier(2_500_000, n_hosts=1500)[["url"]]
+    seen = spark.createDataFrame(urls.iloc[:2_000_000]).repartition(32).persist()
     n_seen = seen.count()
-    cand_pdf = make_seed_frontier(2_500_000, n_hosts=1500).iloc[1_500_000:]
-    cand = spark.createDataFrame(cand_pdf[["url"]]).repartition(32).persist()
+    cand = spark.createDataFrame(urls.iloc[1_500_000:]).repartition(32).persist()
     n_cand = cand.count()
 
     t0 = time.time()
@@ -252,6 +135,5 @@ def bench_dedup_scale(master: str) -> dict:
 
 if __name__ == "__main__":
     mode, master = sys.argv[1], sys.argv[2]
-    out = {"crawl": bench_crawl, "cycle": bench_cycle,
-           "dedup": bench_dedup, "dedup_scale": bench_dedup_scale}[mode](master)
+    out = {"dedup": bench_dedup, "dedup_scale": bench_dedup_scale}[mode](master)
     print(json.dumps(out))

@@ -1,22 +1,20 @@
-"""True multi-executor two-cluster-size scaling attempt (north rule).
+"""N -> 4N executor scaling of the micro-cycle core under spark-submit.
 
 Spark's `local-cluster[N,cores,mem]` master spawns N SEPARATE executor
 JVMs (own heaps, netty shuffle service, own python workers) under a
-standalone-style scheduler — the closest a single box gets to the north
-rule's "same job at N and 4N executors". Identical executor spec
-(4 cores / 8g) on both sides; only the executor COUNT changes:
-2 executors (8 cores) vs 8 executors (32 cores) — exactly a cluster
-scale-out, submitted through the real `spark-submit --py-files` path.
+standalone-style scheduler — the closest a single box gets to "the same
+job at N and 4N executors". Both sides run scripts/submit_scaling.py
+through the real `spark-submit --py-files` path on identical input
+bytes with an identical executor spec; only the executor COUNT changes.
 
-Protocol mirrors scripts/scaling_hunt.py: raw-CPU calibration measured
-BEFORE and AFTER the pair (so a hypervisor steal burst mid-pair is
-visible in the record), result appended to
-BENCH/cluster_scaling_attempts.jsonl; bench.py merges the best
-calibration-qualified attempt into its scaling section as the
-`local_cluster` figure.
+The default geometry fits the host: 1 core per executor, max(1, nproc//4)
+executors on the small side (4x that on the big side), and executor
+memory sized so the big side's executors together take at most half of
+physical RAM. Each run appends its record to
+BENCH/cluster_scaling_attempts.jsonl and prints it.
 
 Usage: python scripts/cluster_scaling.py [n_exec] [scale] [n_runs]
-  n_exec  small side executor count (default 2; big side is 4x)
+  n_exec  small side executor count (default max(1, nproc // 4))
   scale   input replication factor (default 4 — walls >= ~60s on the
           small side so multi-JVM fixed costs don't dominate)
   n_runs  timed runs per side, min taken (default 3)
@@ -34,31 +32,38 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from scripts.scaling_hunt import calibrate  # noqa: E402
-
 BENCH_DIR = os.environ.get("SC_BENCH_DIR", "/tmp/sc_bench")
 LOG = os.path.join(REPO, "BENCH", "cluster_scaling_attempts.jsonl")
-# executor geometry. Overridable because the 2->8 executor pair at 4
-# cores each jumps the remote-shuffle fraction from 1-1/2=50% to
-# 1-1/8=87.5% of shuffle blocks (1.75x the netty-transferred bytes on
-# the big side) — a structural cost of SMALL executor counts that a
-# production N->4N (e.g. 250->1000 executors: 99.6%->99.9%, 1.003x)
-# never pays. SC_EXEC_CORES=2 gives a [4]->[16]-executor pair on the
-# same 8->32 cores whose remote fraction only grows 75%->93.75%
-# (1.25x), separating that asymptotic artifact from engine scaling.
-CORES = int(os.environ.get("SC_EXEC_CORES", "4"))
-MEM_MB = int(os.environ.get("SC_EXEC_MEM_MB", "8192"))
+NPROC = os.cpu_count() or 1
+RAM_MB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+# cores per executor. 1 gives the most executors the host's cores allow:
+# the more executors per side, the smaller the jump between the sides in
+# the share of shuffle blocks that cross JVMs (2 -> 8 executors: 50% ->
+# 87.5%; 4 -> 16: 75% -> 93.75%), a jump a production N -> 4N
+# (250 -> 1000 executors) does not see.
+CORES = int(os.environ.get("SC_EXEC_CORES", "1"))
 ZIP = "/tmp/supercrawler_spark.zip"
 
 
 def _ensure_inputs():
-    if os.path.exists(os.path.join(BENCH_DIR, "_ready_v3")):
+    """The parse-heavy scaling corpus and a 2M-row seen set, written once
+    (deterministic seed) so both sides read identical bytes."""
+    web_path = os.path.join(BENCH_DIR, "web_pages_big")
+    seen_path = os.path.join(BENCH_DIR, "seen_big")
+    if all(os.path.exists(os.path.join(p, "_SUCCESS"))
+           for p in (web_path, seen_path)):
         return
+    from supercrawler_spark import fixtures
     from supercrawler_spark.session import get_spark
-    import bench
     spark = get_spark("prep")
     spark.sparkContext.setLogLevel("ERROR")
-    bench._ensure_bench_inputs(spark)
+    _, web = fixtures.make_bench_web(n_hosts=1500, pages_per_host=24,
+                                     links_per_page=60, filler_kb=8)
+    spark.createDataFrame(web).repartition(NPROC * 4).write \
+        .mode("overwrite").parquet(web_path)
+    seen = fixtures.make_seed_frontier(2_000_000, n_hosts=1500)
+    spark.createDataFrame(seen[["url"]]).repartition(NPROC).write \
+        .mode("overwrite").parquet(seen_path)
     spark.stop()
 
 
@@ -68,23 +73,24 @@ def _ensure_zip():
         cwd=REPO, check=True)
 
 
-def _submit(n_exec: int, scale: int, n_runs: int) -> dict:
+def _submit(n_exec: int, mem_mb: int, scale: int, n_runs: int) -> dict:
     import pyspark
+
+    from supercrawler_spark.session import _default_driver_memory
     submit = os.path.join(os.path.dirname(pyspark.__file__), "bin",
                           "spark-submit")
-    total_cores = n_exec * CORES
     env = {**os.environ, "SC_BENCH_DIR": BENCH_DIR,
            "SC_SUBMIT_SCALE": str(scale), "SC_SUBMIT_RUNS": str(n_runs)}
     out = subprocess.run(
-        [submit, "--master", f"local-cluster[{n_exec},{CORES},{MEM_MB}]",
-         "--conf", f"spark.sql.shuffle.partitions={total_cores}",
-         "--conf", f"spark.executor.memory={MEM_MB - 1024}m",
-         "--conf", "spark.driver.memory=8g",
+        [submit, "--master", f"local-cluster[{n_exec},{CORES},{mem_mb}]",
+         "--conf", f"spark.sql.shuffle.partitions={n_exec * CORES}",
+         "--conf", f"spark.executor.memory={_heap_mb(mem_mb)}m",
+         "--conf", f"spark.driver.memory={_default_driver_memory()}",
          # cluster-faithful CPU isolation: on a real cluster each executor
          # is cgroup-capped at its core grant; in local-cluster every
-         # executor JVM sees the HOST's 32 cores and sizes GC/JIT pools
-         # for all of them, so 8 JVMs oversubscribe the box ~8x and the
-         # big side measures scheduler thrash, not engine scaling.
+         # executor JVM sees all of the host's cores and sizes GC/JIT
+         # pools for them, so 4N JVMs oversubscribe the box and the big
+         # side measures scheduler thrash, not engine scaling.
          "--conf", ("spark.executor.extraJavaOptions="
                     f"-XX:ActiveProcessorCount={CORES}"),
          "--conf", "spark.driver.extraJavaOptions=-XX:ActiveProcessorCount=4",
@@ -97,36 +103,35 @@ def _submit(n_exec: int, scale: int, n_runs: int) -> dict:
     raise RuntimeError(f"no JSON from spark-submit: {out.stderr[-2000:]}")
 
 
+def _heap_mb(mem_mb: int) -> int:
+    """Executor heap inside its worker grant: 1 GiB left for off-heap
+    and the python workers, or half the grant when that is smaller."""
+    return max(mem_mb // 2, mem_mb - 1024)
+
+
 def main():
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 2
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else max(1, NPROC // 4)
     scale = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     n_runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     big = n * 4
+    mem_mb = int(os.environ.get("SC_EXEC_MEM_MB", RAM_MB // 2 // big))
     _ensure_inputs()
     _ensure_zip()
-    cal_before = calibrate(n * CORES, big * CORES)
     t0 = time.time()
-    small_res = _submit(n, scale, n_runs)
-    big_res = _submit(big, scale, n_runs)
-    cal_after = calibrate(n * CORES, big * CORES)
-    raw_eff = round(small_res["wall_s"] / big_res["wall_s"] / 4.0, 3)
-    cal_min = min(cal_before, cal_after)
+    small_res = _submit(n, mem_mb, scale, n_runs)
+    big_res = _submit(big, mem_mb, scale, n_runs)
     rec = {
         "ts": datetime.datetime.now().strftime("%Y-%m-%dT%H:%M:%S"),
         "mode": "local-cluster multi-executor (spark-submit --py-files)",
-        "executor_spec": f"{CORES} cores / {MEM_MB - 1024}m each",
+        "executor_spec": f"{CORES} cores / {_heap_mb(mem_mb)}m each",
         "n_executors_small": n, "n_executors_big": big,
         "scale": scale, "pages": small_res["pages"],
-        "cal_before": cal_before, "cal_after": cal_after,
-        "cal_min": cal_min,
         "wall_s_small": small_res["wall_s"],
         "wall_s_big": big_res["wall_s"],
         "walls_small": small_res["walls_s"],
         "walls_big": big_res["walls_s"],
-        "efficiency_n_to_4n": raw_eff,
-        "efficiency_normalized_by_host": round(raw_eff / cal_min, 3)
-        if cal_min > 0 else None,
-        "qualified": cal_min >= 0.9,
+        "efficiency_n_to_4n": round(
+            small_res["wall_s"] / big_res["wall_s"] / 4.0, 3),
         "elapsed_s": round(time.time() - t0, 1),
     }
     os.makedirs(os.path.dirname(LOG), exist_ok=True)

@@ -1,5 +1,5 @@
-"""Decompose each headline query's FIRST-RUN cost (what bench.py's
-single-shot timing sees) into:
+"""Decompose each headline query's FIRST-RUN cost (what a single-shot
+timing sees) into:
 
   build  — Python-side DataFrame construction (py4j expression assembly)
   plan   — analysis + optimization + physical planning
@@ -9,8 +9,9 @@ single-shot timing sees) into:
   exec2  — second noop-sink execution of a REBUILT DataFrame (codegen
            cache warm, workers up: the steady per-run floor)
 
-Methodology matches bench.py: same session factory, same untimed warmup,
-queries run in the same order. Usage:
+Uses the library's session factory (sized from the host's cores, or
+$SPARK_GRAFT_CPUS) and one untimed warmup scan; queries run in order.
+Usage:
 
   python scripts/profile_firstrun.py [query ...]
 """
@@ -26,7 +27,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 HEADLINE = [
     "flagship_frontier_pop", "q1_pricing_summary", "q3_top_revenue",
@@ -46,7 +46,7 @@ def main():
     entrymod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entrymod)
     queries = entrymod.queries()
-    spark = get_spark("profile_firstrun", master=f"local[{CPUS}]")
+    spark = get_spark("profile_firstrun")
     spark.sparkContext.setLogLevel("ERROR")
     (spark.read.parquet(f"{SF_DIR}/events.parquet").limit(10_000)
      .write.format("noop").mode("overwrite").save())

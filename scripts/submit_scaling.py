@@ -1,10 +1,10 @@
-"""spark-submit entrypoint for the two-cluster-size scaling evidence.
+"""spark-submit entrypoint for the N -> 4N executor scaling measurement.
 
-The north rule requires `spark-submit --py-files` runs at N and 4N
-executors with >=0.8 throughput scaling efficiency. The sandbox has no
-real cluster, so scripts/spark_submit_scaling.sh ships the package zip via
---py-files and runs THIS script under spark-submit at local[N] and
-local[4N] on identical cached input — same bytes, same plan, 4x the cores.
+scripts/cluster_scaling.py ships the package zip via --py-files and runs
+THIS script under spark-submit at N and 4N executors on identical cached
+input — same bytes, same plan, 4x the executors. The timed job is a copy
+of the micro-cycle's distributed core (parse kernel -> first-occurrence
+dedup -> anti-join seen -> per-host rank), not a SparkCrawler cycle.
 
 Uses the ambient spark-submit-provided SparkSession config (master comes
 from --master), exercising the exact deployment path a cluster run uses.

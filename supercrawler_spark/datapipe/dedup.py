@@ -177,7 +177,7 @@ def simhash(df: DataFrame, text_col: str = "text",
     aggregation buffer from 60 to 20 long columns in the stage that
     dominates simhash_near_pairs — measured 9-16% faster end-to-end at a
     100k-doc corpus, parity-exact vs the unpacked 60-agg
-    (scripts/ab_simhash_pack.py). Lane carries cannot collide while every
+    (BENCH/BASELINE.md §4). Lane carries cannot collide while every
     per-doc token count stays below 2^21 = 2,097,151 (a >2M-token single
     document — >10 MB of text in one row — is outside the engine's
     document contract). Token hash = md5→60-bit (md5_long), so DuckDB
@@ -468,7 +468,8 @@ def ngram_span_dedup(df: DataFrame, n: int = 8, text_col: str = "text",
     corpus tokens); span identity is md5 of the joined gram so the
     group-by key is fixed-width (hex string deliberately: parsing it into
     long pairs via conv(substring(...)) per occurrence measured SLOWER
-    end-to-end than the wider shuffle it saves — scripts/ab_ngram_key.py);
+    end-to-end than the wider shuffle it saves — BENCH/BASELINE.md,
+    round-5 late-evening session);
     the occurrence projection is COMPUTED TWICE (once under the stats agg,
     once on the join side — no ReusedExchange, because map-side partial
     aggregation makes the two exchanges non-identical) and that is the

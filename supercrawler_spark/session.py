@@ -40,8 +40,7 @@ def _warm_session(spark: SparkSession) -> None:
     pydaemon) and initializes Arrow serialization in both directions.
     Session construction is one-time init that belongs to the
     application, not to whichever query happens to run first — the same
-    principle as bench.py's own untimed warmup and the optimization
-    guide's §4.5, applied at session scope. ~1 s once per session;
+    principle as a benchmark's untimed warmup, applied at session scope. ~1 s once per session;
     disable with SPARK_GRAFT_WARM=0 (e.g. for many-session test runs)."""
     if os.environ.get("SPARK_GRAFT_WARM", "1") == "0":
         return
