@@ -115,16 +115,12 @@ def bench_dedup_scale(master: str) -> dict:
     pre_df = bloom.prefilter(spark, cand, "url", seen, verify="broadcast")
     timed(lambda: pre_df.count())
     t_bloom, n_bloom = timed(lambda: pre_df.count())
-    t_cogroup, n_cg = timed(
-        lambda: bloom.prefilter(spark, cand, "url", seen,
-                                method="cogroup", verify="broadcast").count())
-    assert n_bloom == n_exact == n_cg, (n_bloom, n_exact, n_cg)
+    assert n_bloom == n_exact, (n_bloom, n_exact)
     return {"mode": "dedup_scale", "master": master, "seen": n_seen,
             "candidates": n_cand, "new": int(n_exact),
             "exact_antijoin_s": t_exact,
             "bloom_build_s": t_build,
             "bloom_prefilter_s": t_bloom,
-            "bloom_prefilter_cogroup_s": t_cogroup,
             "bloom_fpr_est": round(bloom.fp_rate_estimate(), 4),
             # the cluster-scale quantity: does each plan exchange the
             # 10^7-row seen side? (local disk makes shuffles look cheap;

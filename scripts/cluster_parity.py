@@ -10,6 +10,12 @@ spark-submit --py-files on a multi-executor cluster" clause, evidenced
 end to end. No timing is recorded — parity is calibration-independent,
 so host weather cannot invalidate a run.
 
+The cluster is sized to the host like cluster_scaling.py's (whose
+arithmetic it imports): CORES-core executors (1 by default,
+SC_EXEC_CORES overrides), the executors together taking at most half of
+physical RAM (SC_EXEC_MEM_MB overrides the per-executor grant), and the
+driver heap from ``session._default_driver_memory()``.
+
 Usage: python scripts/cluster_parity.py [n_exec]   (default 2)
 """
 
@@ -21,36 +27,19 @@ import os
 import subprocess
 import sys
 
+from cluster_scaling import (CORES, _ensure_zip, _exec_mem_mb, _heap_mb,
+                             _submit_args)
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 LOG = os.path.join(REPO, "BENCH", "cluster_parity.jsonl")
-ZIP = "/tmp/supercrawler_spark.zip"
-CORES = int(os.environ.get("SC_EXEC_CORES", "4"))
-MEM_MB = int(os.environ.get("SC_EXEC_MEM_MB", "4096"))
-
-
-def _ensure_zip():
-    subprocess.run(
-        ["zip", "-qr", ZIP, "supercrawler_spark", "-x", "*__pycache__*"],
-        cwd=REPO, check=True)
 
 
 def _submit(n_exec: int, extra_env: dict | None = None) -> dict:
-    import pyspark
-    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin",
-                          "spark-submit")
     env = {**os.environ, **(extra_env or {})}
     out = subprocess.run(
-        [submit, "--master", f"local-cluster[{n_exec},{CORES},{MEM_MB}]",
-         "--conf", f"spark.sql.shuffle.partitions={n_exec * CORES}",
-         "--conf", f"spark.executor.memory={MEM_MB - 1024}m",
-         "--conf", "spark.driver.memory=4g",
-         "--conf", ("spark.executor.extraJavaOptions="
-                    f"-XX:ActiveProcessorCount={CORES}"),
-         "--conf", "spark.driver.extraJavaOptions=-XX:ActiveProcessorCount=4",
-         "--py-files", ZIP,
-         os.path.join(REPO, "scripts", "submit_parity.py")],
+        _submit_args(n_exec, _exec_mem_mb(n_exec), "submit_parity.py"),
         capture_output=True, text=True, timeout=1200, cwd=REPO, env=env)
     for line in reversed(out.stdout.strip().splitlines()):
         if line.startswith("{"):
@@ -86,7 +75,8 @@ def main():
     rec = {
         "ts": datetime.datetime.now().strftime("%Y-%m-%dT%H:%M:%S"),
         "mode": "local-cluster multi-executor parity (spark-submit --py-files)",
-        "executor_spec": f"{CORES} cores / {MEM_MB - 1024}m each",
+        "executor_spec": (f"{CORES} cores / "
+                          f"{_heap_mb(_exec_mem_mb(n))}m each"),
         **res,
     }
     if with_resume:

@@ -74,33 +74,48 @@ def _ensure_zip():
 
 
 def _submit(n_exec: int, mem_mb: int, scale: int, n_runs: int) -> dict:
-    import pyspark
-
-    from supercrawler_spark.session import _default_driver_memory
-    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin",
-                          "spark-submit")
     env = {**os.environ, "SC_BENCH_DIR": BENCH_DIR,
            "SC_SUBMIT_SCALE": str(scale), "SC_SUBMIT_RUNS": str(n_runs)}
     out = subprocess.run(
-        [submit, "--master", f"local-cluster[{n_exec},{CORES},{mem_mb}]",
-         "--conf", f"spark.sql.shuffle.partitions={n_exec * CORES}",
-         "--conf", f"spark.executor.memory={_heap_mb(mem_mb)}m",
-         "--conf", f"spark.driver.memory={_default_driver_memory()}",
-         # cluster-faithful CPU isolation: on a real cluster each executor
-         # is cgroup-capped at its core grant; in local-cluster every
-         # executor JVM sees all of the host's cores and sizes GC/JIT
-         # pools for them, so 4N JVMs oversubscribe the box and the big
-         # side measures scheduler thrash, not engine scaling.
-         "--conf", ("spark.executor.extraJavaOptions="
-                    f"-XX:ActiveProcessorCount={CORES}"),
-         "--conf", "spark.driver.extraJavaOptions=-XX:ActiveProcessorCount=4",
-         "--py-files", ZIP,
-         os.path.join(REPO, "scripts", "submit_scaling.py")],
+        _submit_args(n_exec, mem_mb, "submit_scaling.py"),
         capture_output=True, text=True, timeout=2400, env=env, cwd=REPO)
     for line in reversed(out.stdout.strip().splitlines()):
         if line.startswith("{"):
             return json.loads(line)
     raise RuntimeError(f"no JSON from spark-submit: {out.stderr[-2000:]}")
+
+
+def _submit_args(n_exec: int, mem_mb: int, payload: str) -> list[str]:
+    """spark-submit command line running ``scripts/<payload>`` on a
+    local-cluster of ``n_exec`` CORES-core executors, each with a worker
+    grant of ``mem_mb``, and a driver heap sized to the host."""
+    import pyspark
+
+    from supercrawler_spark.session import _default_driver_memory
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin",
+                          "spark-submit")
+    return [
+        submit, "--master", f"local-cluster[{n_exec},{CORES},{mem_mb}]",
+        "--conf", f"spark.sql.shuffle.partitions={n_exec * CORES}",
+        "--conf", f"spark.executor.memory={_heap_mb(mem_mb)}m",
+        "--conf", f"spark.driver.memory={_default_driver_memory()}",
+        # cluster-faithful CPU isolation: on a real cluster each executor
+        # is cgroup-capped at its core grant; in local-cluster every
+        # executor JVM sees all of the host's cores and sizes GC/JIT
+        # pools for them, so 4N JVMs oversubscribe the box and the big
+        # side measures scheduler thrash, not engine scaling.
+        "--conf", ("spark.executor.extraJavaOptions="
+                   f"-XX:ActiveProcessorCount={CORES}"),
+        "--conf", ("spark.driver.extraJavaOptions="
+                   f"-XX:ActiveProcessorCount={min(4, NPROC)}"),
+        "--py-files", ZIP,
+        os.path.join(REPO, "scripts", payload)]
+
+
+def _exec_mem_mb(n_exec: int) -> int:
+    """Worker grant per executor such that ``n_exec`` executors together
+    take at most half of physical RAM (SC_EXEC_MEM_MB overrides)."""
+    return int(os.environ.get("SC_EXEC_MEM_MB", RAM_MB // 2 // n_exec))
 
 
 def _heap_mb(mem_mb: int) -> int:
@@ -114,7 +129,7 @@ def main():
     scale = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     n_runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     big = n * 4
-    mem_mb = int(os.environ.get("SC_EXEC_MEM_MB", RAM_MB // 2 // big))
+    mem_mb = _exec_mem_mb(big)
     _ensure_inputs()
     _ensure_zip()
     t0 = time.time()

@@ -146,6 +146,22 @@ def local_df(spark: SparkSession, rows: list[dict], schema: T.StructType) -> Dat
     return spark.createDataFrame(table, schema=schema)
 
 
+def minus_seen(links: DataFrame, seen: DataFrame, col: str = "url") -> DataFrame:
+    """links − seen WITHOUT shuffling the seen side. A plain left_anti
+    with a 10^10-row right side shuffles the whole frontier every cycle;
+    here the politeness-bounded links broadcast INTO the seen scan
+    (left_semi streams the frontier through a broadcast hash join → the
+    few hits), and the hits broadcast back for the anti. Net cost: one
+    column-pruned scan of seen, zero frontier shuffle.
+
+    Precondition: ``links`` is already unique on ``col`` (the cycle's
+    first-occurrence-deduped links, seed's deduplicated batch and the
+    Bloom prefilter's suspects, a subset of its unique candidates, all
+    are), so no distinct shuffle here."""
+    hits = seen.join(F.broadcast(links.select(col)), col, "left_semi")
+    return links.join(F.broadcast(hits), col, "left_anti")
+
+
 @dataclass
 class CrawlConfig:
     """Reference option parity — /root/reference/lib/Crawler.js:13-40."""
@@ -218,10 +234,6 @@ class CrawlConfig:
     use_bloom: bool = False              # Bloom-prefiltered dedup (scale path)
     bloom_partitions: int = 32
     bloom_capacity: int = 1 << 20
-    bloom_probe: str = "cogroup"         # "cogroup" (scale default: no full-
-    # matrix broadcast — each task gets only its url_hash range's bit array,
-    # and the per-cycle add never re-collects the table) | "broadcast"
-    # (small-filter fast path: table collected once per add and broadcast)
     bloom_rebuild_fpr: float | None = 0.05
     # capacity planning for 10^10-key frontiers: after every bloom add the
     # engine checks the analytic fp_rate_estimate; above this threshold the
@@ -373,20 +385,6 @@ class SparkCrawler:
         n_part = int(self.spark.conf.get("spark.sql.shuffle.partitions") or 32)
         self._delta = merged.coalesce(n_part).localCheckpoint(eager=True)
 
-    def _minus_seen(self, links: DataFrame, seen: DataFrame) -> DataFrame:
-        """links − seen WITHOUT shuffling the seen side. A plain left_anti
-        with a 10^10-row right side shuffles the whole frontier every cycle;
-        here the politeness-bounded links broadcast INTO the seen scan
-        (left_semi streams the frontier through a broadcast hash join → the
-        few hits), and the hits broadcast back for the anti. Net cost: one
-        column-pruned scan of seen, zero frontier shuffle.
-
-        Precondition: ``links`` is already unique on url (both callers —
-        the cycle's first-occurrence-deduped links and seed's
-        deduplicated batch — guarantee it), so no distinct shuffle here."""
-        hits = seen.join(F.broadcast(links.select("url")), "url", "left_semi")
-        return links.join(F.broadcast(hits), "url", "left_anti")
-
     def _compact(self) -> None:
         """Rebase onto the last committed snapshot: the parquet just
         written becomes the base layer (scan-pruned by next_fetch_time
@@ -424,7 +422,7 @@ class SparkCrawler:
         df = local_df(self.spark, rows, FRONTIER_SCHEMA)
         view = self.frontier
         if view is not None:
-            df = self._minus_seen(df, view.select("url"))
+            df = minus_seen(df, view.select("url"))
         self._apply_changes(df)
         if self._bloom is not None:
             self._bloom.add(self.spark, df.select("url"))
@@ -437,7 +435,7 @@ class SparkCrawler:
 
         - input dedup via dropDuplicates (one shuffle on url);
         - seen-check is a plain left_anti (both sides can be huge — this is
-          a one-time seeding cost, unlike the per-cycle _minus_seen);
+          a one-time seeding cost, unlike the per-cycle minus_seen);
         - dense seq assignment WITHOUT a global window: per-partition
           counts → cumulative offsets (P-row collect) + an intra-partition
           row_number, so no single task ever sees the whole seed list.
@@ -883,16 +881,15 @@ class SparkCrawler:
 
             # dedup vs the seen set (= the whole frontier): Bloom-prefiltered
             # (scale path), and the exact verify streams the frontier
-            # through broadcast joins — never shuffles it (_minus_seen)
+            # through broadcast joins — never shuffles it (minus_seen)
             seen = self.frontier.select("url")
             if self._bloom is not None:
                 # suspects are politeness-bounded → broadcast verify (the
                 # frontier streams, never shuffles)
                 links_unique = self._bloom.prefilter(self.spark, links_unique, "url",
-                                                     seen, method=cfg.bloom_probe,
-                                                     verify="broadcast")
+                                                     seen, verify="broadcast")
             else:
-                links_unique = self._minus_seen(links_unique, seen)
+                links_unique = minus_seen(links_unique, seen)
             if self.plan_sink is not None:
                 self.plan_sink["dedup"] = plan_str(links_unique)
 

@@ -590,7 +590,7 @@ def incremental_dedup(new_batch: DataFrame, history_fps: DataFrame,
     false negatives; bloom positives are exactly-verified), but only the
     suspect rows reach the verify join, so the giant history table is
     joined against a sliver of the batch. Mirrors the crawl engine's
-    seen-set prefilter (crawler.run_cycle / bloom.py:291-338).
+    seen-set prefilter (crawler.run_cycle / PartitionedBloom.prefilter).
 
     Returns the surviving new rows: (id_col, fp, n_batch_copies) — rows
     neither duplicated inside the batch (keeper wins) nor present in

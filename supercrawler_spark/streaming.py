@@ -208,7 +208,7 @@ def streaming_link_ingest(spark: SparkSession, links_dir: str,
             seen_all = seen_all.unionByName(
                 spark.read.parquet(out_dir).select("url"))
         new = bloom.prefilter(spark, cand, "url", seen_all,
-                              method="cogroup", verify="broadcast")
+                              verify="broadcast")
         new = new.persist()
         if new.count():
             new.write.mode("append").parquet(out_dir)

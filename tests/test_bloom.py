@@ -1,11 +1,11 @@
-"""Partitioned Bloom seen-filter: exactness vs plain anti-join + cuckoo."""
+"""Partitioned Bloom seen-filter: exactness vs plain anti-join, a numpy
+reference probe, persistence and capacity planning."""
 
 import numpy as np
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from supercrawler_spark.bloom import CuckooFilter, PartitionedBloom
+from supercrawler_spark import bloom as bloom_mod
+from supercrawler_spark.bloom import PartitionedBloom
 from supercrawler_spark.fixtures import make_seed_frontier
 
 
@@ -18,14 +18,18 @@ def url_sets(spark):
 
 
 def test_bloom_prefilter_equals_exact_antijoin(spark, url_sets):
+    """Both exact-verify strategies return the plain left_anti's set."""
     seen, cand = url_sets
     bloom = PartitionedBloom(partitions=8, capacity=1 << 16)
     n = bloom.add(spark, seen)
     assert n == 20000
-    got = {r["url"] for r in bloom.prefilter(spark, cand, "url", seen).collect()}
     want = {r["url"] for r in cand.join(seen, "url", "left_anti").collect()}
-    assert got == want
     assert len(want) == 10000
+    for verify in ("shuffle", "broadcast"):
+        got = {r["url"] for r in bloom.prefilter(
+            spark, cand, "url", seen, verify=verify).collect()}
+        assert got == want, verify
+    bloom.release()
 
 
 def test_bloom_no_false_negatives_and_low_fpr(spark, url_sets):
@@ -43,12 +47,20 @@ def test_bloom_no_false_negatives_and_low_fpr(spark, url_sets):
 
 
 def test_bloom_roundtrip_persistence(spark, url_sets):
-    seen, cand = url_sets
+    """from_df(to_df()) in memory keeps the shape, the key count and every
+    partition's bitset."""
+    seen, _ = url_sets
     bloom = PartitionedBloom(partitions=8, capacity=1 << 16)
     bloom.add(spark, seen)
-    restored = PartitionedBloom.from_pandas(bloom.to_pandas())
-    assert np.array_equal(bloom.bits, restored.bits)
-    assert (restored.P, restored.m, restored.k) == (bloom.P, bloom.m, bloom.k)
+    restored = PartitionedBloom.from_df(bloom.to_df(spark))
+    assert (restored.P, restored.m, restored.k, restored.n_added) == \
+        (bloom.P, bloom.m, bloom.k, bloom.n_added)
+
+    def rows(f):
+        return sorted((r["pid"], bytes(r["bitset"])) for r in
+                      f.to_df(spark).select("pid", "bitset").collect())
+
+    assert rows(restored) == rows(bloom)
 
 
 def test_crawler_with_bloom_matches_without(spark):
@@ -74,37 +86,41 @@ def test_crawler_with_bloom_matches_without(spark):
 
 
 def test_cogroup_prefilter_equals_exact_antijoin(spark, url_sets):
-    """The co-partitioned (no-broadcast) probe returns the identical set."""
+    """The co-partitioned (no-broadcast) probe returns the identical set even
+    from an overfilled filter, where most new urls are false positives and
+    must be dropped back in by the exact verify."""
     seen, cand = url_sets
-    bloom = PartitionedBloom(partitions=8, capacity=1 << 16)
+    bloom = PartitionedBloom(partitions=8, capacity=1 << 10)
     bloom.add(spark, seen)
-    got = {r["url"] for r in bloom.prefilter(
-        spark, cand, "url", seen, method="cogroup").collect()}
+    assert bloom.fp_rate_estimate() > 0.5
+    got = {r["url"] for r in bloom.prefilter(spark, cand, "url", seen).collect()}
     want = {r["url"] for r in cand.join(seen, "url", "left_anti").collect()}
     assert got == want
+    bloom.release()
 
 
-def test_cogroup_flag_equals_broadcast_flag(spark, url_sets):
+def test_flag_equals_numpy_reference(spark, url_sets):
+    """The cogroup probe answers exactly what the bit test gives outside
+    Spark: collect the persisted (pid, bitset) rows into a P x m/8 matrix
+    and test each candidate's k positions in numpy."""
     seen, cand = url_sets
     bloom = PartitionedBloom(partitions=8, capacity=1 << 16)
     bloom.add(spark, seen)
-    a = bloom.maybe_seen_flag(spark, cand, "url").toPandas() \
-             .set_index("url")["_maybe_seen"]
-    b = bloom.maybe_seen_flag_cogrouped(spark, cand, "url").toPandas() \
-             .set_index("url")["_maybe_seen"]
-    assert a.sort_index().equals(b.sort_index())
-
-
-def test_broadcast_cached_until_add(spark, url_sets):
-    seen, cand = url_sets
-    bloom = PartitionedBloom(partitions=8, capacity=1 << 16)
-    bloom.add(spark, seen)
-    bloom.maybe_seen_flag(spark, cand, "url").count()
-    bc1 = bloom._bc
-    bloom.maybe_seen_flag(spark, cand, "url").count()
-    assert bloom._bc is bc1          # reused across probe calls
-    bloom.add(spark, cand.limit(10))
-    assert bloom._bc is None         # invalidated by the add
+    bits = np.zeros((bloom.P, bloom.m // 8), dtype=np.uint8)
+    for r in bloom.to_df(spark).select("pid", "bitset").collect():
+        bits[r["pid"]] = np.frombuffer(bytes(r["bitset"]), dtype=np.uint8)
+    hashed = (bloom._with_hashes(cand, "url")
+              .select("url", "_h1", "_h2", "_pid").toPandas()
+              .sort_values("url"))
+    pos = bloom_mod._positions(hashed["_h1"].to_numpy(),
+                               hashed["_h2"].to_numpy(), bloom.m, bloom.k)
+    byte = bits[hashed["_pid"].to_numpy()[:, None], pos >> 3]
+    want = ((byte & (1 << (pos & 7)).astype(np.uint8)) != 0).all(axis=1)
+    got = (bloom.maybe_seen_flag(spark, cand, "url").toPandas()
+           .sort_values("url")["_maybe_seen"].to_numpy())
+    assert len(got) == len(want) == 30000
+    assert np.array_equal(got, want)
+    assert want.sum() >= 20000 and not want.all()
 
 
 def test_bloom_resume_restores_seen_filter(spark):
@@ -151,30 +167,17 @@ def test_bloom_resume_restores_seen_filter(spark):
     assert n_rows == n_urls
 
 
-def test_cuckoo_insert_lookup_delete():
-    cf = CuckooFilter(capacity=1 << 12)
-    hs = [hash(f"url-{i}") & 0x7FFFFFFFFFFFFFFF for i in range(2000)]
-    for h in hs:
-        assert cf.add(h)
-    assert all(cf.contains(h) for h in hs)
-    # delete half, they must leave (no false positives from deleted fps
-    # beyond fingerprint collisions)
-    for h in hs[:1000]:
-        assert cf.delete(h)
-    assert all(cf.contains(h) for h in hs[1000:])
-    gone = sum(cf.contains(h) for h in hs[:1000])
-    assert gone < 50  # only residual fingerprint collisions
-
-
 def test_add_never_ships_bitsets_to_driver(spark, url_sets):
     """The distributed build/merge contract: add() may collect scalars (the
     row count) but NEVER a frame containing a binary bitset column — at
     10^10 keys the bit matrix is ~12 GB and must stay executor-side."""
-    from pyspark.sql import DataFrame
     from pyspark.sql import types as T
 
     seen, cand = url_sets
     bloom = PartitionedBloom(partitions=8, capacity=1 << 16)
+    # the session's concrete DataFrame class overrides collect/toPandas,
+    # so the spy goes on it, not on the pyspark.sql.DataFrame base
+    DataFrame = type(seen)
 
     collected_schemas = []
     orig_collect = DataFrame.collect
@@ -195,30 +198,55 @@ def test_add_never_ships_bitsets_to_driver(spark, url_sets):
     finally:
         DataFrame.collect, DataFrame.toPandas = orig_collect, orig_topandas
     assert n == 20000
+    assert collected_schemas  # the spy saw add()'s scalar collects
     binary_fields = [
         (schema, f.name) for schema in collected_schemas
         for f in schema.fields if isinstance(f.dataType, T.BinaryType)]
     assert not binary_fields, f"bitset bytes crossed the driver: {binary_fields}"
     # and the merged filter still answers correctly (cand ⊂ filter now)
-    flagged = bloom.maybe_seen_flag_cogrouped(spark, cand, "url").toPandas()
+    flagged = bloom.maybe_seen_flag(spark, cand, "url").toPandas()
     assert flagged["_maybe_seen"].all()
 
 
-def test_to_df_from_df_roundtrip_is_distributed(spark, url_sets):
-    """Persistence round-trips through DataFrames without collecting
-    bitsets, and the restored filter probes identically."""
+def test_to_df_from_df_roundtrip_is_distributed(spark, url_sets, tmp_path):
+    """Persistence round-trips through parquet without collecting
+    bitsets: the restored filter has the same shape and bits and probes
+    identically."""
     seen, cand = url_sets
     bloom = PartitionedBloom(partitions=8, capacity=1 << 16)
     bloom.add(spark, seen)
-    restored = PartitionedBloom.from_df(bloom.to_df(spark))
+    path = str(tmp_path / "bloom")
+    bloom.to_df(spark).write.parquet(path)
+    restored = PartitionedBloom.from_df(spark.read.parquet(path))
     assert (restored.P, restored.m, restored.k, restored.n_added) == \
         (bloom.P, bloom.m, bloom.k, bloom.n_added)
-    a = bloom.maybe_seen_flag_cogrouped(spark, cand, "url").toPandas() \
+
+    def rows(f):
+        return sorted((r["pid"], bytes(r["bitset"])) for r in
+                      f.to_df(spark).select("pid", "bitset").collect())
+
+    assert rows(restored) == rows(bloom)
+    assert len(rows(bloom)) == bloom.P
+    a = bloom.maybe_seen_flag(spark, cand, "url").toPandas() \
              .set_index("url")["_maybe_seen"].sort_index()
-    b = restored.maybe_seen_flag_cogrouped(spark, cand, "url").toPandas() \
+    b = restored.maybe_seen_flag(spark, cand, "url").toPandas() \
                 .set_index("url")["_maybe_seen"].sort_index()
     assert a.equals(b)
-    assert np.array_equal(bloom.bits, restored.bits)
+
+
+def test_empty_bloom_roundtrip(spark):
+    """A never-added filter persists as P zero rows, restores, flags
+    nothing, and still takes adds."""
+    bloom = PartitionedBloom(partitions=4, capacity=1 << 10)
+    restored = PartitionedBloom.from_df(bloom.to_df(spark))
+    assert (restored.P, restored.m, restored.n_added) == (4, bloom.m, 0)
+    urls = spark.createDataFrame([(f"http://x/{i}",) for i in range(20)],
+                                 ["url"])
+    assert not any(r["_maybe_seen"]
+                   for r in restored.maybe_seen_flag(spark, urls).collect())
+    assert restored.add(spark, urls) == 20
+    assert all(r["_maybe_seen"]
+               for r in restored.maybe_seen_flag(spark, urls).collect())
 
 
 def test_prefilter_releases_previous_persist(spark, url_sets):
@@ -236,103 +264,6 @@ def test_prefilter_releases_previous_persist(spark, url_sets):
     bloom.release()
     assert bloom._last_flagged is None
 
-
-def test_partitioned_cuckoo_add_delete_contains(spark, url_sets):
-    """Distributed deletable seen-set: add → all present; delete half →
-    they leave (minus 16-bit fingerprint collisions), the rest stay; no
-    false negatives at any point."""
-    from supercrawler_spark.bloom import PartitionedCuckoo
-
-    seen, cand = url_sets  # 20k seen; cand = 20k overlap + 10k new
-    cf = PartitionedCuckoo(partitions=8, capacity_per_partition=1 << 13)
-    n = cf.add(spark, seen)
-    assert n == 20000  # no overflow at this fill factor
-    assert cf.n_added == 20000
-
-    flagged = cf.contains_flag(spark, cand, "url").toPandas()
-    idx = flagged["url"].str.extract(r"page(\d+)$")[0].astype(int)
-    assert flagged.loc[idx < 20000, "_maybe_seen"].all()  # no false negatives
-    fpr = flagged.loc[idx >= 20000, "_maybe_seen"].mean()
-    assert fpr < 0.02, f"cuckoo FPR {fpr}"
-
-    # delete the first 10k urls
-    to_del = seen.filter(
-        F.regexp_extract("url", r"page(\d+)$", 1).cast("int") < 10000)
-    n_del = cf.delete(spark, to_del, "url")
-    assert n_del == 10000
-    after = cf.contains_flag(spark, cand, "url").toPandas()
-    idx = after["url"].str.extract(r"page(\d+)$")[0].astype(int)
-    kept = after.loc[(idx >= 10000) & (idx < 20000), "_maybe_seen"]
-    assert kept.all()  # survivors still present — deletes are precise
-    gone = after.loc[idx < 10000, "_maybe_seen"].mean()
-    assert gone < 0.02, f"deleted urls still flagged at rate {gone}"
-
-
-def test_partitioned_cuckoo_persistence_roundtrip(spark, url_sets):
-    from supercrawler_spark.bloom import PartitionedCuckoo
-
-    seen, cand = url_sets
-    cf = PartitionedCuckoo(partitions=8, capacity_per_partition=1 << 13)
-    cf.add(spark, seen)
-    restored = PartitionedCuckoo.from_df(cf.to_df(spark))
-    assert (restored.P, restored.n_buckets, restored.n_added) == \
-        (cf.P, cf.n_buckets, cf.n_added)
-    a = cf.contains_flag(spark, cand, "url").toPandas() \
-          .set_index("url")["_maybe_seen"].sort_index()
-    b = restored.contains_flag(spark, cand, "url").toPandas() \
-                .set_index("url")["_maybe_seen"].sort_index()
-    assert a.equals(b)
-
-
-def test_partitioned_cuckoo_mutate_never_ships_slots_to_driver(spark, url_sets):
-    """add/delete collect only scalar counts — the uint16 slot matrix stays
-    executor-side (same contract as the Bloom build)."""
-    from pyspark.sql import DataFrame
-    from pyspark.sql import types as T
-
-    from supercrawler_spark.bloom import PartitionedCuckoo
-
-    seen, _ = url_sets
-    cf = PartitionedCuckoo(partitions=8, capacity_per_partition=1 << 13)
-    collected = []
-    orig_collect, orig_topandas = DataFrame.collect, DataFrame.toPandas
-
-    def spy_c(self):
-        collected.append(self.schema)
-        return orig_collect(self)
-
-    def spy_p(self):
-        collected.append(self.schema)
-        return orig_topandas(self)
-
-    DataFrame.collect, DataFrame.toPandas = spy_c, spy_p
-    try:
-        cf.add(spark, seen)
-        cf.delete(spark, seen.limit(100))
-    finally:
-        DataFrame.collect, DataFrame.toPandas = orig_collect, orig_topandas
-    binary_fields = [(s, f.name) for s in collected
-                     for f in s.fields if isinstance(f.dataType, T.BinaryType)]
-    assert not binary_fields, f"slot bytes crossed the driver: {binary_fields}"
-
-def test_cuckoo_empty_roundtrip(spark):
-    """to_df on a never-added cuckoo filter must carry meta rows so
-    from_df can roundtrip (ADVICE r3: previously returned 0 rows and
-    from_df crashed on meta None)."""
-    from supercrawler_spark.bloom import PartitionedCuckoo
-
-    cf = PartitionedCuckoo(partitions=4, capacity_per_partition=1 << 10)
-    restored = PartitionedCuckoo.from_df(cf.to_df(spark))
-    assert restored.P == 4 and restored.n_added == 0
-    assert restored.n_buckets == cf.n_buckets
-    urls = spark.createDataFrame([(f"http://x/{i}",) for i in range(20)],
-                                 ["url"])
-    flags = restored.contains_flag(spark, urls).collect()
-    assert all(not r["_maybe_seen"] for r in flags)
-    # the restored filter is fully functional: add then probe
-    assert restored.add(spark, urls) == 20
-    flags2 = restored.contains_flag(spark, urls).collect()
-    assert all(r["_maybe_seen"] for r in flags2)
 
 def test_bloom_fpr_estimate_and_grown_empty(spark):
     """Capacity planning: the analytic FPR estimate rises with fill, a
@@ -407,37 +338,3 @@ def test_engine_rebuilds_saturated_bloom(spark, tmp_path):
     # dedup still exact after the rebuild: re-seeding adds nothing
     cr.seed(urls)
     assert len(cr.seen_urls()) == 3000
-
-def test_cuckoo_batch_ops_equal_sequential_property():
-    """Property: any interleaving of batch add/delete produces the same
-    membership answers as the sequential kernel (hypothesis over key sets
-    and op order; no Spark involved — this is the per-partition kernel)."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from supercrawler_spark.bloom import CuckooFilter
-
-    keys = st.lists(st.integers(min_value=1, max_value=2**62),
-                    min_size=1, max_size=300)
-
-    @settings(max_examples=25, deadline=None)
-    @given(add1=keys, dels=keys, add2=keys)
-    def prop(add1, dels, add2):
-        a = CuckooFilter(capacity=1 << 11)
-        b = CuckooFilter(capacity=1 << 11)
-        for h in add1:
-            a.add(int(h))
-        na = sum(bool(a.delete(int(h))) for h in dels)
-        for h in add2:
-            a.add(int(h))
-        nb_added1 = b.add_batch(np.array(add1, dtype=np.uint64))
-        nb = b.delete_batch(np.array(dels, dtype=np.uint64))
-        nb_added2 = b.add_batch(np.array(add2, dtype=np.uint64))
-        assert nb_added1 == len(add1) and nb_added2 == len(add2)
-        assert na == nb
-        probe = set(add1) | set(dels) | set(add2)
-        for h in probe:
-            assert a.contains(int(h)) == b.contains(int(h)), h
-
-    prop()

@@ -63,6 +63,60 @@ def test_merge_delta_is_batch_sized(cycle_plans):
 
 
 @pytest.fixture(scope="module")
+def bloom_cycle(spark):
+    """The same cycle with the Bloom seen filter on. Every frame the
+    driver collects during the cycle is recorded by schema (the spy goes
+    on the session's concrete DataFrame class, which overrides
+    collect/toPandas)."""
+    DataFrame = type(spark.range(0))
+    seeds, web, _ = fixtures.make_web_fixture(n_hosts=2, pages_per_host=3)
+    cr = SparkCrawler(spark, spark.createDataFrame(web), tempfile.mkdtemp(),
+                      CrawlConfig(budget=6, use_bloom=True, bloom_partitions=4,
+                                  bloom_capacity=1 << 12,
+                                  robots_enabled=False))
+    cr.seed_df(spark.createDataFrame(
+        [(u,) for u in sorted(set(seeds["url"]))], ["url"]))
+    sink, collected = {}, []
+    cr.plan_sink = sink
+    orig_collect, orig_topandas = DataFrame.collect, DataFrame.toPandas
+
+    def spy_collect(self):
+        collected.append(self.schema)
+        return orig_collect(self)
+
+    def spy_topandas(self):
+        collected.append(self.schema)
+        return orig_topandas(self)
+
+    DataFrame.collect, DataFrame.toPandas = spy_collect, spy_topandas
+    try:
+        stats = cr.run_cycle()
+    finally:
+        DataFrame.collect, DataFrame.toPandas = orig_collect, orig_topandas
+    assert stats.popped > 0 and stats.links_new > 0
+    return sink, collected
+
+
+def test_bloom_dedup_is_cogroup_probe_then_broadcast_verify(bloom_cycle):
+    """With the Bloom on, candidates meet the bitset table in a cogroup
+    (no Python UDF holding a broadcast bit matrix) and the suspects'
+    exact verify still streams the frontier through broadcast joins."""
+    p = bloom_cycle[0]["dedup"]
+    assert "FlatMapCoGroupsInPandas" in p, p
+    assert "LeftSemi" in p and "LeftAnti" in p, p
+    assert "ArrowEvalPython" not in p, p
+    assert "SortMergeJoin" not in p
+
+
+def test_bloom_cycle_never_ships_bitsets_to_driver(bloom_cycle):
+    """A whole Bloom cycle (probe, verify, add, commit) collects no frame
+    with a bitset column: the bit matrix stays executor-side."""
+    collected = bloom_cycle[1]
+    assert collected
+    assert not [s for s in collected if "bitset" in s.fieldNames()]
+
+
+@pytest.fixture(scope="module")
 def robots_cycle_plans(spark):
     """The same cycle with robots checks on."""
     seeds, web, _ = fixtures.make_web_fixture(n_hosts=2, pages_per_host=3)

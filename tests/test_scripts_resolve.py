@@ -2,10 +2,10 @@
 
 Spark-free: each `*.py` at the repo root and under `scripts/` is parsed
 (not imported), and every repo-local import in it — `bench`,
-`cluster_parity`, `scripts.*` or `supercrawler_spark.*`, at module level
-or inside a function — must name a file in the checkout, and each name
-taken `from` such a module must be bound in it. Shell scripts under
-`scripts/` must pass `bash -n`.
+`cluster_parity`, `cluster_scaling`, `scripts.*` or
+`supercrawler_spark.*`, at module level or inside a function — must name
+a file in the checkout, and each name taken `from` such a module must be
+bound in it. Shell scripts under `scripts/` must pass `bash -n`.
 """
 
 from __future__ import annotations
@@ -20,7 +20,8 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # scripts put the repo root, and the scripts dir, on sys.path
 ROOTS = (REPO, os.path.join(REPO, "scripts"))
-LOCAL = {"bench", "cluster_parity", "scripts", "supercrawler_spark"}
+LOCAL = {"bench", "cluster_parity", "cluster_scaling", "scripts",
+         "supercrawler_spark"}
 ENTRY_POINTS = sorted(glob.glob(os.path.join(REPO, "*.py"))
                       + glob.glob(os.path.join(REPO, "scripts", "*.py")))
 

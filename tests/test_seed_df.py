@@ -147,7 +147,7 @@ def test_seed_df_then_resume_keeps_bloom_complete(spark):
     c2 = SparkCrawler(spark, web_df, wd, cfg())
     assert c2.resume()
     seeded = spark.createDataFrame([(u,) for u in set(seeds["url"])], ["url"])
-    flagged = c2._bloom.maybe_seen_flag_cogrouped(spark, seeded, "url").toPandas()
+    flagged = c2._bloom.maybe_seen_flag(spark, seeded, "url").toPandas()
     assert flagged["_maybe_seen"].all()  # restored filter knows the seeds
 
     c2.crawl(max_cycles=100)
