@@ -3,9 +3,9 @@ offset scheme vs the flat single-partition window.
 
 The reference bulk-inserts ~50k URLs per sitemap page
 (/root/reference/lib/DbUrlList.js:123-127); a budget of 20 such pages is a
-10^6-link cycle. Above CrawlConfig.seq_partition_threshold the engine
+10^6-link cycle. Above crawler.SEQ_PARTITION_THRESHOLD the engine
 assigns dense seqs via repartitionByRange + per-partition row_number +
-cumulative offsets (crawler._assign_seq_distributed) — this script shows
+cumulative offsets (crawler.assign_dense_seq) — this script shows
 (a) both paths produce identical seqs, (b) the distributed path has no
 single-task stage (max rows per partition ~ n/P, not n), and (c) the
 wall-clock at 10^6 rows.
@@ -19,7 +19,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -32,17 +31,13 @@ from pyspark.sql import functions as F
 def main():
     n_links = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     master = sys.argv[2] if len(sys.argv) > 2 else None
-    from supercrawler_spark.crawler import CrawlConfig, SparkCrawler
+    from supercrawler_spark.crawler import assign_dense_seq
     from supercrawler_spark.session import get_spark
 
     spark = get_spark("bench-seq", master=master)
     spark.sparkContext.setLogLevel("ERROR")
-    web_df = spark.createDataFrame(
-        [], schema="url string, status_code int, content_type string, "
-                   "location string, body binary")
-    cr = SparkCrawler(spark, web_df, tempfile.mkdtemp(),
-                      CrawlConfig(budget=20))
-    cr.max_seq = 999  # arbitrary prior frontier position
+    max_seq = 999  # arbitrary prior frontier position
+    order = ["batch_idx", "source_order", "link_idx"]
 
     # 20 sitemap pages x 50k links each (batch_idx = page in the batch)
     links = (spark.range(n_links).select(
@@ -63,7 +58,7 @@ def main():
 
     # distributed path (what run_cycle uses above the threshold)
     t0 = time.time()
-    dist = cr._assign_seq_distributed(links)
+    dist, _ = assign_dense_seq(spark, links, order, max_seq)
     chk_dist = chk(dist)
     t_dist = round(time.time() - t0, 2)
     stats = (dist.groupBy(F.spark_partition_id().alias("p"))
@@ -73,10 +68,9 @@ def main():
 
     # flat single-partition window (the sub-threshold path)
     t0 = time.time()
-    w = Window.partitionBy(F.lit(0)).orderBy(
-        "batch_idx", "source_order", "link_idx")
+    w = Window.partitionBy(F.lit(0)).orderBy(*order)
     flat = links.withColumn(
-        "seq", F.lit(cr.max_seq) + F.row_number().over(w).cast("long"))
+        "seq", F.lit(max_seq) + F.row_number().over(w).cast("long"))
     chk_flat = chk(flat)
     t_flat = round(time.time() - t0, 2)
 

@@ -44,9 +44,12 @@ Scale notes (100 TB / 10^10-URL frontier):
 
 from __future__ import annotations
 
+import functools
 import math
 import os
+from collections import OrderedDict
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import pandas as pd
 import pyarrow as pa
@@ -68,6 +71,19 @@ LEASE_MS = 60000.0  # DbUrlList.js:273 — in-flight lease window
 # ("A request error occured. " + err.message — Crawler.js:396-399)
 REQUEST_ERROR_MSG = "A request error occured. connect ECONNREFUSED"
 
+# driver-side LRU bound of each host-keyed state table's memo (the table is
+# the source of truth, carried in snapshots; the memo only bounds repeat
+# lookups — web-scale host counts never accumulate on the driver)
+HOST_MEMO_SIZE = 10000
+
+# cycles discovering more links than this assign seqs with assign_dense_seq
+# (range partition + per-partition offsets, no single-task window); smaller
+# cycles use a flat window (one task, but bounded rows — cheaper than an
+# extra shuffle + counts job). Both give IDENTICAL seqs (parity-pinned); the
+# threshold exists for sitemap-dump cycles (DbUrlList.js:123-127 — B pages
+# × 50k links ⇒ ~10^6 rows).
+SEQ_PARTITION_THRESHOLD = 65536
+
 FRONTIER_SCHEMA = T.StructType([
     T.StructField("url_hash", T.LongType()),
     T.StructField("url", T.StringType()),
@@ -79,6 +95,7 @@ FRONTIER_SCHEMA = T.StructType([
     T.StructField("next_fetch_time", T.DoubleType()),
     T.StructField("seq", T.LongType()),
 ])
+FRONTIER_COLS = FRONTIER_SCHEMA.fieldNames()
 
 CRAWL_LOG_SCHEMA = T.StructType([
     T.StructField("cycle_id", T.LongType()),
@@ -162,6 +179,132 @@ def minus_seen(links: DataFrame, seen: DataFrame, col: str = "url") -> DataFrame
     return links.join(F.broadcast(hits), col, "left_anti")
 
 
+def shuffle_partitions(spark: SparkSession) -> int:
+    """Partition count for the exchanges the engine sizes itself."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions") or 32)
+
+
+def overlay(old: DataFrame, new: DataFrame, key: str, cols: list[str],
+            keys: DataFrame | None = None, new_first: bool = True) -> DataFrame:
+    """Newer rows win by key: ``old`` loses every row whose ``key`` is in
+    ``new`` (a left-anti against the broadcast key set — ``old`` is
+    streamed, never shuffled), and the rest is unioned with ``new``.
+    ``keys``: optional pre-pinned frame holding exactly ``new``'s key set,
+    so building the broadcast does not evaluate ``new``'s plan twice."""
+    kept = old.join(F.broadcast((keys if keys is not None else new).select(key)),
+                    key, "left_anti").select(*cols)
+    new = new.select(*cols)
+    return new.unionByName(kept) if new_first else kept.unionByName(new)
+
+
+def assign_dense_seq(spark: SparkSession, df: DataFrame, order: list,
+                     start: int) -> tuple[DataFrame, int]:
+    """Dense seqs start+1, start+2, ... in ``order`` (unique per row)
+    WITHOUT a single-partition window: range-partition on the order key,
+    then per-partition row_number + cumulative offsets from a P-row counts
+    collect — no task ever sees all rows. The seqs equal a flat window's
+    global rank in key order. Returns (df + ``seq``, row count).
+
+    localCheckpoint (not persist) pins the range partitioning before the
+    counts collect: with persist(), losing a cached block would re-sample
+    the range bounds on recompute and move rows between partitions,
+    silently duplicating or skipping seqs."""
+    pinned = (df.repartitionByRange(shuffle_partitions(spark), *order)
+              .withColumn("_spid", F.spark_partition_id())
+              .localCheckpoint(eager=True))
+    counts = {r["_spid"]: r["n"] for r in
+              pinned.groupBy("_spid").agg(F.count(F.lit(1)).alias("n")).collect()}
+    offsets, acc = [], 0
+    for pid in sorted(counts):
+        offsets.append({"_spid": pid, "_off": acc})
+        acc += counts[pid]
+    off_df = local_df(spark, offsets,
+                      T.StructType([T.StructField("_spid", T.IntegerType()),
+                                    T.StructField("_off", T.LongType())]))
+    w = Window.partitionBy("_spid").orderBy(*order)
+    return (pinned.join(F.broadcast(off_df), "_spid")
+            .withColumn("seq", F.lit(start) + F.col("_off")
+                        + F.row_number().over(w).cast("long"))
+            .drop("_spid", "_off")), acc
+
+
+def _unfetched(df: DataFrame) -> DataFrame:
+    """Frontier rows for never-fetched urls; ``df`` brings url, host, seq
+    and next_fetch_time."""
+    return (df.withColumn("url_hash", SF.url_hash(F.col("url")))
+            .withColumn("status_code", F.lit(None).cast("int"))
+            .withColumn("error_code", F.lit(None).cast("string"))
+            .withColumn("error_message", F.lit(None).cast("string"))
+            .withColumn("num_errors", F.lit(0))
+            .select(*FRONTIER_COLS))
+
+
+class HostStateTable:
+    """Per-host crawl state (robots entries, decay delays) kept off the
+    driver: a host-keyed TABLE (``base``, snapshot-carried, parquet-backed
+    after each commit) is the source of truth; the driver holds only a
+    bounded LRU ``memo`` and the ``dirty`` rows put since the last commit
+    (batch-bounded) — never the host universe. Rows are tuples of the
+    schema's non-key columns, built by ``make``."""
+
+    def __init__(self, schema: T.StructType, make=tuple,
+                 base: DataFrame | None = None):
+        self.schema, self.make, self.base = schema, make, base
+        self.key = schema.fieldNames()[0]
+        self.memo: OrderedDict = OrderedDict()
+        self.dirty: dict = {}
+
+    def _remember(self, key: str, row) -> None:
+        self.memo[key] = row
+        self.memo.move_to_end(key)
+        while len(self.memo) > HOST_MEMO_SIZE:
+            self.memo.popitem(last=False)
+
+    def put(self, key: str, row) -> None:
+        self._remember(key, row)
+        self.dirty[key] = row  # table row, flushed at the next commit
+
+    def lookup(self, spark: SparkSession, keys: list[str]) -> dict:
+        """Rows for ``keys``: memo → dirty set → one broadcast-join collect
+        against the table for the misses (the result is bounded by the
+        keys asked for; the table itself never collects fully)."""
+        out, missing = {}, []
+        for k in dict.fromkeys(keys):
+            row = self.memo.get(k)
+            if row is not None:
+                self.memo.move_to_end(k)
+            else:
+                row = self.dirty.get(k)
+            if row is not None:
+                out[k] = row
+            else:
+                missing.append(k)
+        if missing and self.base is not None:
+            kdf = local_df(spark, [{self.key: k} for k in missing],
+                           T.StructType([self.schema[self.key]]))
+            for r in self.base.join(F.broadcast(kdf), self.key).collect():
+                row = self.make(r[1:])
+                out[r[0]] = row
+                self._remember(r[0], row)
+        return out
+
+    def table(self, spark: SparkSession) -> DataFrame:
+        """The state to commit: dirty rows overlaid on the base table."""
+        if self.base is not None and not self.dirty:
+            return self.base
+        names = self.schema.fieldNames()
+        dirty = local_df(spark, [dict(zip(names, (k, *row)))
+                                 for k, row in self.dirty.items()], self.schema)
+        if self.base is None:
+            return dirty
+        return overlay(self.base, dirty, self.key, names)
+
+    def rebase(self, base: DataFrame | None) -> None:
+        """After a commit: the table just written is the base; no row is
+        dirty any more."""
+        self.base, self.dirty = base, {}
+
+
 @dataclass
 class CrawlConfig:
     """Reference option parity — /root/reference/lib/Crawler.js:13-40."""
@@ -184,15 +327,6 @@ class CrawlConfig:
     robots_enabled: bool = True          # Crawler.js robotsEnabled
     robots_ignore_server_error: bool = False  # Crawler.js robotsIgnoreServerError
     robots_cache_ttl_ms: float = 3600000.0    # Crawler.js:16,38-40
-    robots_memo_size: int = 10000
-    # driver-side LRU over the robots TABLE (the table is the source of
-    # truth, carried in snapshots; the memo only bounds repeat lookups —
-    # web-scale host counts never accumulate on the driver)
-    host_delay_memo_size: int = 10000
-    # same shape for decay-mode per-host state (RedisUrlList zset scores):
-    # the host→(delay, last_update) pairs live in a snapshot-carried TABLE;
-    # the driver holds only a bounded LRU memo + the dirty entries since
-    # the last commit (batch-bounded) — never the host universe
     user_agent: object = ("Mozilla/5.0 (compatible; supercrawler/1.0; "
                           "+https://github.com/brendonboshell/supercrawler)")
     # str, or a callable url -> str (Crawler.js:30-34,85-90 — the reference
@@ -224,13 +358,6 @@ class CrawlConfig:
     # tick after the earliest next_fetch_time — but only if it is within
     # this horizon (None = stop at exhaustion; retries/recrawls beyond the
     # horizon are treated as terminal, like stopping the reference crawler).
-    seq_partition_threshold: int = 65536
-    # cycles discovering more links than this assign seqs via the
-    # range-partition + per-partition-offset scheme (no single-task window);
-    # smaller cycles use a flat window (one task, but bounded rows — cheaper
-    # than an extra shuffle + counts job). Both paths produce IDENTICAL seqs
-    # (parity-pinned); the threshold exists for sitemap-dump cycles
-    # (DbUrlList.js:123-127 — B pages × 50k links ⇒ ~10^6 rows).
     use_bloom: bool = False              # Bloom-prefiltered dedup (scale path)
     bloom_partitions: int = 32
     bloom_capacity: int = 1 << 20
@@ -261,8 +388,7 @@ class CrawlConfig:
     fetch_timeout_s: float = 30.0
 
 
-@dataclass
-class _RobotsEntry:
+class _RobotsEntry(NamedTuple):
     txt: str | None          # robots text ("" = allow-all)
     deny_status: int | None  # set ⇒ deny entire host (Crawler.js:469-491)
     req_err: bool            # robots fetch was a request error
@@ -311,22 +437,14 @@ class SparkCrawler:
         # checkpoint_every cycles (Iceberg MERGE-on-read, emulated).
         self._base: DataFrame | None = None
         self._delta: DataFrame | None = None
-        # robots state: host-keyed TABLE (snapshot-carried, parquet-backed
-        # after each commit) + a bounded LRU memo + the dirty entries since
-        # the last snapshot. The driver never holds all hosts at once.
-        from collections import OrderedDict
-        self.robots_cache: "OrderedDict[str, _RobotsEntry]" = OrderedDict()
-        self._robots_base: DataFrame | None = None
-        self._robots_dirty: dict[str, _RobotsEntry] = {}
+        # host-keyed state tables: robots entries, and decay-mode
+        # host → (delay, last_update) (RedisUrlList zset scores)
+        self.robots = HostStateTable(ROBOTS_SCHEMA, _RobotsEntry._make)
+        self.host_delay = HostStateTable(HOST_DELAY_SCHEMA)
         self.max_seq: int = -1
         self.cycle_id: int = 0
         self.cycle_time: float = self.config.virtual_start_ms
         self.crawl_order: list[tuple[int, int, str]] = []
-        # decay-mode per-host state: bounded LRU memo over a snapshot-carried
-        # TABLE (same LSM shape as robots) — host → (delay, last_update)
-        self.host_delay: "OrderedDict[str, tuple[float, float]]" = OrderedDict()
-        self._host_delay_base: DataFrame | None = None
-        self._host_delay_dirty: dict[str, tuple[float, float]] = {}
         self._log_df_buffer: list[DataFrame] = []
         self._pending_results: list[DataFrame] = []
         self._metrics_buffer: list[dict] = []
@@ -352,10 +470,8 @@ class SparkCrawler:
             return self._delta
         if self._delta is None:
             return self._base
-        cols = [f.name for f in FRONTIER_SCHEMA]
-        live_base = self._base.join(
-            F.broadcast(self._delta.select("url")), "url", "left_anti")
-        return live_base.select(*cols).unionByName(self._delta.select(*cols))
+        return overlay(self._base, self._delta, "url", FRONTIER_COLS,
+                       new_first=False)
 
     def _apply_changes(self, changes: DataFrame,
                        keys: DataFrame | None = None) -> None:
@@ -371,19 +487,16 @@ class SparkCrawler:
         the key set on checkpointed/persisted frames (the cycle: popped
         batch ∪ new links) pass it here so the merge plan runs exactly
         once, inside the checkpoint job."""
-        cols = [f.name for f in FRONTIER_SCHEMA]
         if self._delta is None:
-            merged = changes.select(*cols)
+            merged = changes.select(*FRONTIER_COLS)
         else:
-            key_df = (keys if keys is not None else changes).select("url")
-            kept = self._delta.join(
-                F.broadcast(key_df), "url", "left_anti")
-            merged = changes.select(*cols).unionByName(kept.select(*cols))
+            merged = overlay(self._delta, changes, "url", FRONTIER_COLS,
+                             keys=keys)
         # bound the delta's partition count: unions add partitions every
         # cycle (32 + 64 + ... → hundreds of near-empty tasks by cycle N);
         # coalesce is shuffle-free and keeps per-cycle task counts flat
-        n_part = int(self.spark.conf.get("spark.sql.shuffle.partitions") or 32)
-        self._delta = merged.coalesce(n_part).localCheckpoint(eager=True)
+        self._delta = (merged.coalesce(shuffle_partitions(self.spark))
+                       .localCheckpoint(eager=True))
 
     def _compact(self) -> None:
         """Rebase onto the last committed snapshot: the parquet just
@@ -409,12 +522,12 @@ class SparkCrawler:
             rows.append(self._fresh_row(u, self.max_seq, self.cycle_time))
         if self.config.order_mode == "decay":
             from .priority import decay_scores
-            state = self._host_delay_lookup([r["host"] for r in rows])
+            state = self.host_delay.lookup(self.spark, [r["host"] for r in rows])
             scores = decay_scores(
                 [(r["host"], self.cycle_time) for r in rows],
                 state, self.config.delay_half_life_ms)
             for h, v in state.items():
-                self._host_delay_store(h, v)
+                self.host_delay.put(h, v)
             for r, s in zip(rows, scores):
                 r["next_fetch_time"] = s
         if not rows:
@@ -436,12 +549,9 @@ class SparkCrawler:
         - input dedup via dropDuplicates (one shuffle on url);
         - seen-check is a plain left_anti (both sides can be huge — this is
           a one-time seeding cost, unlike the per-cycle minus_seen);
-        - dense seq assignment WITHOUT a global window: per-partition
-          counts → cumulative offsets (P-row collect) + an intra-partition
-          row_number, so no single task ever sees the whole seed list.
-          With ``order_col`` the input is range-partitioned on it first,
-          making the seq order globally deterministic (FIFO semantics);
-          otherwise seq order follows the input partitioning;
+        - dense seqs from ``assign_dense_seq`` (no single task ever sees
+          the whole seed list), in ``order_col`` order when given (FIFO
+          semantics), else in url order;
         - the result is committed + compacted straight into the parquet
           base layer, not the delta.
 
@@ -460,66 +570,38 @@ class SparkCrawler:
         view = self.frontier
         if view is not None:
             inc = inc.join(view.select("url"), "url", "left_anti")
+        order = [F.col("url")]
         if order_col is not None and order_col != url_col:
             ords = (urls_df.groupBy(F.col(url_col).alias("url"))
                     .agg(F.min(order_col).alias("_ord")))
-            inc = (inc.join(ords, "url", "left")
-                   .repartitionByRange(F.col("_ord"), F.col("url")))
-            order_expr = [F.col("_ord"), F.col("url")]
-        else:
-            inc = inc.repartitionByRange(F.col("url"))
-            order_expr = [F.col("url")]
-        inc = inc.withColumn("_pid", F.spark_partition_id()).persist()
-        counts = {r["_pid"]: r["n"] for r in
-                  inc.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()}
-        total = int(sum(counts.values()))
+            inc = inc.join(ords, "url", "left")
+            order = [F.col("_ord"), F.col("url")]
+        seqd, total = assign_dense_seq(self.spark, inc, order, self.max_seq)
         if total == 0:
-            inc.unpersist()
             return 0
-        offsets, acc = {}, 0
-        for pid in sorted(counts):
-            offsets[pid] = acc
-            acc += counts[pid]
-        off_df = local_df(self.spark,
-                          [{"_pid": p, "_off": o} for p, o in offsets.items()],
-                          T.StructType([T.StructField("_pid", T.IntegerType()),
-                                        T.StructField("_off", T.LongType())]))
-        w = Window.partitionBy("_pid").orderBy(*order_expr)
-        seqd = (inc.join(F.broadcast(off_df), "_pid")
-                .withColumn("seq", F.lit(self.max_seq + 1) + F.col("_off")
-                            + F.row_number().over(w).cast("long") - F.lit(1)))
         if self.config.order_mode == "fifo":
             nft = F.lit(0.0)
         else:
             nft = (F.lit(self.cycle_time)
                    - SF.deterministic_priority(F.col("url")) * F.lit(YEAR_MS))
-        rows = (seqd
-                .withColumn("url_hash", SF.url_hash(F.col("url")))
-                .withColumn("host", F.lower(F.parse_url(F.col("url"), F.lit("HOST"))))
-                .withColumn("status_code", F.lit(None).cast("int"))
-                .withColumn("error_code", F.lit(None).cast("string"))
-                .withColumn("error_message", F.lit(None).cast("string"))
-                .withColumn("num_errors", F.lit(0))
-                .withColumn("next_fetch_time", nft)
-                .select(*[f.name for f in FRONTIER_SCHEMA]))
+        rows = _unfetched(seqd.withColumn("next_fetch_time", nft).withColumn(
+            "host", F.lower(F.parse_url(F.col("url"), F.lit("HOST")))))
         # stage lazily and commit straight to the parquet base — a web-scale
         # seed list must not pass through an in-memory delta checkpoint;
         # the snapshot write is the single materialization
-        cols = [f.name for f in FRONTIER_SCHEMA]
         view = self.frontier
-        staged = rows.select(*cols) if view is None else \
-            view.select(*cols).unionByName(rows.select(*cols))
-        self._base, self._delta = staged, None
+        self._base = rows if view is None else \
+            view.select(*FRONTIER_COLS).unionByName(rows)
+        self._delta = None
         self.max_seq += total
         if self._bloom is not None:
             # BEFORE the snapshot commit: the bloom table is persisted inside
             # the commit, and a resume() restores it verbatim — a filter
             # missing the just-seeded URLs would mark them "definitively
             # never seen" after resume and re-insert duplicate frontier rows
-            self._bloom.add(self.spark, inc.select("url"))
+            self._bloom.add(self.spark, seqd.select("url"))
             self._maybe_rebuild_bloom()
         self._commit_snapshot()  # writes parquet (incl. bloom), rebases onto it
-        inc.unpersist()
         return total
 
     def _fresh_row(self, url: str, seq: int, now_ms: float) -> dict:
@@ -551,22 +633,15 @@ class SparkCrawler:
         # parquet-backed base layer: the due-scan prunes on row-group stats
         self._base = self.store.load(self.spark, "frontier")
         self._delta = None
-        # robots state resumes as a TABLE — no collect of all hosts; rows
-        # are looked up per batch as the crawl touches them
-        from collections import OrderedDict
-        self._robots_base = self.store.load(self.spark, "robots")
-        self.robots_cache = OrderedDict()
-        self._robots_dirty = {}
+        # host state resumes as TABLES — no collect of all hosts; rows are
+        # looked up per batch as the crawl touches them
+        self.robots = HostStateTable(ROBOTS_SCHEMA, _RobotsEntry._make,
+                                     self.store.load(self.spark, "robots"))
+        self.host_delay = HostStateTable(
+            HOST_DELAY_SCHEMA, base=self.store.load(self.spark, "host_delay"))
         self.max_seq = meta["max_seq"]
         self.cycle_id = meta["cycle_id"]
         self.cycle_time = meta["cycle_time"]
-        # decay host-state resumes as a TABLE (looked up per cycle);
-        # legacy manifests carried it in meta — fold those into the dirty
-        # set so the next commit migrates them into the table
-        self._host_delay_base = self.store.load(self.spark, "host_delay")
-        self.host_delay = OrderedDict(
-            (h, tuple(v)) for h, v in meta.get("host_delay", {}).items())
-        self._host_delay_dirty = dict(self.host_delay)
         if self.config.use_bloom:
             # restore the seen-filter — a fresh (empty) filter would mark
             # already-crawled URLs "definitively new", bypass the exact
@@ -582,51 +657,18 @@ class SparkCrawler:
         return True
 
     def _commit_snapshot(self) -> None:
-        # robots table = dirty entries (since last snapshot, batch-bounded)
-        # overriding the previous table — same LSM shape as the frontier
-        dirty_df = local_df(self.spark, [
-            {"robots_key": k, "robots_txt": e.txt, "deny_status": e.deny_status,
-             "req_err": e.req_err, "fetched_at": e.fetched_at}
-            for k, e in self._robots_dirty.items()
-        ], ROBOTS_SCHEMA)
-        if self._robots_base is None:
-            robots_df = dirty_df
-        elif self._robots_dirty:
-            kept = self._robots_base.join(
-                F.broadcast(dirty_df.select("robots_key")),
-                "robots_key", "left_anti")
-            cols = [f.name for f in ROBOTS_SCHEMA]
-            robots_df = dirty_df.select(*cols).unionByName(kept.select(*cols))
-        else:
-            robots_df = self._robots_base
-        # decay host-state table: dirty entries override the previous table
-        # (identical LSM shape; only written in decay mode)
-        host_delay_df = None
-        if self.config.order_mode == "decay":
-            hd_dirty = local_df(self.spark, [
-                {"host": h, "delay": v[0], "last_update": v[1]}
-                for h, v in self._host_delay_dirty.items()
-            ], HOST_DELAY_SCHEMA)
-            if self._host_delay_base is None:
-                host_delay_df = hd_dirty
-            elif self._host_delay_dirty:
-                kept = self._host_delay_base.join(
-                    F.broadcast(hd_dirty.select("host")), "host", "left_anti")
-                cols = [f.name for f in HOST_DELAY_SCHEMA]
-                host_delay_df = hd_dirty.select(*cols).unionByName(
-                    kept.select(*cols))
-            else:
-                host_delay_df = self._host_delay_base
         self._flush_logs()
         # frontier sorted by next_fetch_time within partitions → parquet
         # min/max stats make the due-filter prune files at scale (O1)
-        frontier_out = self.frontier.repartition(
-            self.spark.conf.get("spark.sql.shuffle.partitions") and
-            int(self.spark.conf.get("spark.sql.shuffle.partitions")) or 32,
-            "host").sortWithinPartitions("next_fetch_time")
-        tables = {"frontier": frontier_out, "robots": robots_df}
-        if host_delay_df is not None:
-            tables["host_delay"] = host_delay_df
+        tables = {"frontier": self.frontier
+                  .repartition(shuffle_partitions(self.spark), "host")
+                  .sortWithinPartitions("next_fetch_time")}
+        # host-state tables: dirty rows overlaid on the previous table —
+        # same LSM shape as the frontier (host_delay only in decay mode)
+        states = {"robots": self.robots}
+        if self.config.order_mode == "decay":
+            states["host_delay"] = self.host_delay
+        tables.update((name, st.table(self.spark)) for name, st in states.items())
         if self._bloom is not None:
             tables["bloom"] = self._bloom.to_df(self.spark)
         # meta carries ONLY scalars — per-host decay state is a table now
@@ -641,11 +683,8 @@ class SparkCrawler:
         # the delta resets — the only O(|frontier|) write, amortized over
         # checkpoint_every cycles
         self._compact()
-        self._robots_base = self.store.load(self.spark, "robots")
-        self._robots_dirty = {}
-        if host_delay_df is not None:
-            self._host_delay_base = self.store.load(self.spark, "host_delay")
-            self._host_delay_dirty = {}
+        for name, st in states.items():
+            st.rebase(self.store.load(self.spark, name))
         if self._bloom is not None:
             # re-root the bitset table on the parquet just written (frees
             # the executor-side checkpoint blocks; bits are unchanged)
@@ -863,6 +902,10 @@ class SparkCrawler:
         n_links = links_all.count()
         stats.links_found = int(n_links) - len(robots_inserts)
 
+        # virtual time at which each batch row is processed
+        t_row = (F.lit(self.cycle_time)
+                 + F.col("batch_idx").cast("double") * F.lit(cfg.interval_ms))
+        scored = None  # decay mode's pinned scores, released with the cycle
         if n_links:
             # first occurrence within the cycle wins (unique-index semantics,
             # J1). min(struct) ordered lexicographically by (batch_idx,
@@ -897,38 +940,30 @@ class SparkCrawler:
             # the cycle is small; above the threshold (sitemap-dump cycles)
             # the range-partitioned offset scheme — identical seqs, no
             # single-task stage
-            t_insert = (F.lit(self.cycle_time)
-                        + F.col("batch_idx").cast("double") * F.lit(cfg.interval_ms))
-            if n_links > cfg.seq_partition_threshold:
-                seqd = self._assign_seq_distributed(links_unique)
+            if n_links > SEQ_PARTITION_THRESHOLD:
+                seqd, _ = assign_dense_seq(
+                    self.spark, links_unique,
+                    ["batch_idx", "source_order", "link_idx"], self.max_seq)
             else:
                 w_seq = Window.partitionBy(F.lit(0)).orderBy(
                     "batch_idx", "source_order", "link_idx")
                 seqd = links_unique.withColumn(
                     "seq",
                     F.lit(self.max_seq) + F.row_number().over(w_seq).cast("long"))
-            base = (seqd
-                    .withColumn("url_hash", SF.url_hash(F.col("url")))
+            base = (seqd.withColumn("t_insert", t_row)
                     # JVM-side host extraction (handler links are already
                     # canonicalized to lowercase hosts)
-                    .withColumn("host", F.lower(F.parse_url(F.col("url"), F.lit("HOST"))))
-                    .withColumn("t_insert", t_insert))
+                    .withColumn("host", F.lower(F.parse_url(F.col("url"), F.lit("HOST")))))
             if cfg.order_mode == "fifo":
                 base = base.withColumn("next_fetch_time", F.lit(0.0))
             elif cfg.order_mode == "decay":
-                base = self._decay_score_rows(base)
+                base = scored = self._decay_score_rows(base)
             else:
                 base = base.withColumn(
                     "next_fetch_time",
                     F.col("t_insert")
                     - SF.deterministic_priority(F.col("url")) * F.lit(YEAR_MS))
-            new_rows = (base
-                        .withColumn("status_code", F.lit(None).cast("int"))
-                        .withColumn("error_code", F.lit(None).cast("string"))
-                        .withColumn("error_message", F.lit(None).cast("string"))
-                        .withColumn("num_errors", F.lit(0))
-                        .select(*[f.name for f in FRONTIER_SCHEMA]))
-            new_rows = new_rows.persist()
+            new_rows = _unfetched(base).persist()
         else:
             new_rows = None  # zero discovered links → nothing to dedup/insert
         prev_max_seq = self.max_seq
@@ -942,9 +977,7 @@ class SparkCrawler:
             F.col("url").alias("u_url"), "batch_idx", "status_out",
             F.col("error_code").alias("u_error_code"),
             F.col("error_message").alias("u_error_message"))
-        t_row = (F.lit(self.cycle_time)
-                 + F.col("batch_idx").cast("double") * F.lit(cfg.interval_ms))
-        batch_state = frame.select(*[f.name for f in FRONTIER_SCHEMA])
+        batch_state = frame.select(*FRONTIER_COLS)
         # both sides are batch-sized; broadcast the update side so the merge
         # never sorts/exchanges (local frames carry no size stats, so the
         # planner would otherwise fall back to a sort-merge join)
@@ -1013,11 +1046,9 @@ class SparkCrawler:
             self._maybe_rebuild_bloom()
         kernel_out.unpersist()
         found.unpersist()
-        if new_rows is not None:
-            new_rows.unpersist()
-        if getattr(self, "_scored_tmp", None) is not None:
-            self._scored_tmp.unpersist()
-            self._scored_tmp = None
+        for df in (new_rows, scored):
+            if df is not None:
+                df.unpersist()
 
         # --- lineage / metrics (S7, A5) -------------------------------------
         self._log_cycle(results, stats)
@@ -1064,39 +1095,6 @@ class SparkCrawler:
             self._bloom.release()
             self._bloom = grown
 
-    def _assign_seq_distributed(self, links: DataFrame) -> DataFrame:
-        """Dense seq assignment for a huge link cycle WITHOUT a
-        single-partition window: range-partition on the deterministic order
-        key (batch_idx, source_order, link_idx — unique per row), then
-        per-partition row_number + cumulative offsets from a P-row counts
-        collect. Same scheme as seed_df; produces seqs identical to the
-        flat window (global rank in key order), pinned by
-        tests/test_crawl_parity.py."""
-        n_part = int(self.spark.conf.get("spark.sql.shuffle.partitions") or 32)
-        keys = [F.col("batch_idx"), F.col("source_order"), F.col("link_idx")]
-        # localCheckpoint (not persist): pins the range partitioning so the
-        # collected per-partition counts can never go stale — with persist(),
-        # losing cached blocks would re-sample the range boundaries and
-        # redistribute rows, silently duplicating/skipping seqs.
-        lu = (links.repartitionByRange(n_part, *keys)
-              .withColumn("_spid", F.spark_partition_id())
-              .localCheckpoint(eager=True))
-        counts = {r["_spid"]: r["n"] for r in
-                  lu.groupBy("_spid").agg(F.count(F.lit(1)).alias("n")).collect()}
-        offsets, acc = {}, 0
-        for pid in sorted(counts):
-            offsets[pid] = acc
-            acc += counts[pid]
-        off_df = local_df(self.spark,
-                          [{"_spid": p, "_off": o} for p, o in offsets.items()],
-                          T.StructType([T.StructField("_spid", T.IntegerType()),
-                                        T.StructField("_off", T.LongType())]))
-        w = Window.partitionBy("_spid").orderBy(*keys)
-        return (lu.join(F.broadcast(off_df), "_spid")
-                .withColumn("seq", F.lit(self.max_seq) + F.col("_off")
-                            + F.row_number().over(w).cast("long"))
-                .drop("_spid", "_off"))
-
     def _fast_forward(self) -> bool:
         """Advance the virtual clock to the first tick after the earliest
         pending next_fetch_time within the idle-skip horizon. Returns True
@@ -1119,7 +1117,10 @@ class SparkCrawler:
         inserts: exact sequential decay recurrence per host, computed
         distributedly with ``applyInPandas`` over host groups (each group is
         budget-bounded), with carried per-host state broadcast in and the
-        final per-host state harvested back (one tiny collect)."""
+        final per-host state harvested back (one tiny collect). Returns the
+        persisted scored frame (its ``_d_*``/``_is_last`` helper columns
+        are dropped by the caller's final projection); the caller
+        unpersists it."""
         from .priority import decay_scores
 
         hl = self.config.delay_half_life_ms
@@ -1127,7 +1128,7 @@ class SparkCrawler:
         # lookup — never the whole host universe)
         cycle_hosts = [r["host"] for r in base.select("host").distinct().collect()]
         state_bc = self.spark.sparkContext.broadcast(
-            self._host_delay_lookup(cycle_hosts))
+            self.host_delay.lookup(self.spark, cycle_hosts))
         out_schema = T.StructType(
             list(base.schema.fields) + [
                 T.StructField("next_fetch_time", T.DoubleType()),
@@ -1156,9 +1157,8 @@ class SparkCrawler:
         scored = scored.persist()
         for r in scored.filter(F.col("_is_last")) \
                        .select("host", "_d_delay", "_d_last").collect():
-            self._host_delay_store(r["host"], (r["_d_delay"], r["_d_last"]))
-        self._scored_tmp = scored
-        return scored.drop("_is_last", "_d_delay", "_d_last")
+            self.host_delay.put(r["host"], (r["_d_delay"], r["_d_last"]))
+        return scored
 
     # ------------------------------------------------------------------
     # pop (W1/W2): salted host-bucket window rank + global top-B
@@ -1196,8 +1196,7 @@ class SparkCrawler:
                       .filter(F.col("_hrn") <= cfg.per_host_cap).drop("_hrn"))
         # full rows: the batch IS the merge's update target (batch-sized),
         # so the upsert never rejoins or rewrites the frontier at large
-        frame = (due.orderBy(*order).limit(cfg.budget)
-                    .select(*[f.name for f in FRONTIER_SCHEMA]))
+        frame = due.orderBy(*order).limit(cfg.budget).select(*FRONTIER_COLS)
         if self.plan_sink is not None:
             self.plan_sink["pop"] = plan_str(frame)
         # batch_idx = pick position (reference crawl order). The global
@@ -1219,94 +1218,13 @@ class SparkCrawler:
         return frame, int(frame.count())
 
     # ------------------------------------------------------------------
-    # decay host-state layer (A1/W3) — host-keyed table + bounded LRU memo
-    # ------------------------------------------------------------------
-    def _host_delay_store(self, host: str,
-                          dl: tuple[float, float]) -> None:
-        memo = self.host_delay
-        memo[host] = tuple(dl)
-        memo.move_to_end(host)
-        self._host_delay_dirty[host] = tuple(dl)  # table row, flushed at commit
-        while len(memo) > self.config.host_delay_memo_size:
-            memo.popitem(last=False)
-
-    def _host_delay_lookup(self, hosts: list[str]) -> dict[str, tuple[float, float]]:
-        """(delay, last_update) for the given hosts: LRU memo → dirty set →
-        one broadcast lookup against the host_delay TABLE for the misses
-        (result bounded by the cycle's host count; the table itself never
-        collects fully — RedisUrlList keeps this in a server-side zset,
-        lib/RedisUrlList.js:25-53, we keep it in a snapshot table)."""
-        out: dict[str, tuple[float, float]] = {}
-        missing: list[str] = []
-        for h in dict.fromkeys(hosts):
-            v = self.host_delay.get(h)
-            if v is not None:
-                self.host_delay.move_to_end(h)
-            else:
-                v = self._host_delay_dirty.get(h)
-            if v is not None:
-                out[h] = tuple(v)
-            else:
-                missing.append(h)
-        if missing and self._host_delay_base is not None:
-            kdf = local_df(self.spark, [{"host": h} for h in missing],
-                           T.StructType([T.StructField("host", T.StringType())]))
-            rows = self._host_delay_base.join(F.broadcast(kdf), "host").collect()
-            for r in rows:
-                v = (float(r["delay"]), float(r["last_update"]))
-                out[r["host"]] = v
-                self.host_delay[r["host"]] = v
-                self.host_delay.move_to_end(r["host"])
-            while len(self.host_delay) > self.config.host_delay_memo_size:
-                self.host_delay.popitem(last=False)
-        return out
-
-    # ------------------------------------------------------------------
     # robots layer (S5/F2/F3/T6) — host-keyed table + bounded LRU memo
     # ------------------------------------------------------------------
-    def _robots_memo_put(self, key: str, entry: _RobotsEntry) -> None:
-        memo = self.robots_cache
-        memo[key] = entry
-        memo.move_to_end(key)
-        while len(memo) > self.config.robots_memo_size:
-            memo.popitem(last=False)
-
-    def _robots_store(self, key: str, entry: _RobotsEntry) -> None:
-        self._robots_memo_put(key, entry)
-        self._robots_dirty[key] = entry  # table row, flushed at snapshot
-
-    def _robots_lookup(self, keys: list[str]) -> dict[str, _RobotsEntry]:
-        """Entries for the batch's robots keys: LRU memo → dirty set →
-        one broadcast-semi lookup against the robots TABLE for the misses
-        (batch-bounded result; the table itself never collects fully)."""
-        out: dict[str, _RobotsEntry] = {}
-        missing: list[str] = []
-        for k in keys:
-            entry = self.robots_cache.get(k)
-            if entry is not None:
-                self.robots_cache.move_to_end(k)
-            else:
-                entry = self._robots_dirty.get(k)
-            if entry is not None:
-                out[k] = entry
-            else:
-                missing.append(k)
-        if missing and self._robots_base is not None:
-            kdf = local_df(self.spark, [{"robots_key": k} for k in set(missing)],
-                           T.StructType([T.StructField("robots_key", T.StringType())]))
-            rows = self._robots_base.join(F.broadcast(kdf), "robots_key").collect()
-            for r in rows:
-                entry = _RobotsEntry(r["robots_txt"], r["deny_status"],
-                                     r["req_err"], r["fetched_at"])
-                out[r["robots_key"]] = entry
-                self._robots_memo_put(r["robots_key"], entry)
-        return out
-
     def _robots_dim_df(self, keys: list[str]) -> DataFrame:
         """Per-cycle robots dimension: ONLY the batch's keys (budget-
         bounded), broadcast-joined to the candidates — never the whole
         host universe."""
-        entries = self._robots_lookup(list(dict.fromkeys(keys)))
+        entries = self.robots.lookup(self.spark, keys)
         rows = [
             {"robots_key": k, "robots_txt": e.txt, "robots_deny_status": e.deny_status,
              "robots_req_err": e.req_err}
@@ -1328,7 +1246,7 @@ class SparkCrawler:
         per-URL batch. Returns the ordered frontier enqueues of the robots
         URLs themselves (Crawler.js:463-465)."""
         cfg = self.config
-        known = self._robots_lookup([k for _, k in key_firsts])
+        known = self.robots.lookup(self.spark, [k for _, k in key_firsts])
         wanted: list[tuple[int, str]] = []
         for idx, key in key_firsts:
             entry = known.get(key)
@@ -1343,91 +1261,53 @@ class SparkCrawler:
         for _, key in wanted:
             resp = fetched.get(key)
             if resp is None:
-                self._robots_store(key, _RobotsEntry(None, None, True, self.cycle_time))
-                continue
-            status, body = resp
-            if status < 400:
-                txt = (bytes(body) if body is not None else b"").decode(
-                    "utf-8", errors="replace")
-                self._robots_store(key, _RobotsEntry(txt, None, False, self.cycle_time))
-            elif status in (404, 410) or (status == 500 and cfg.robots_ignore_server_error):
-                self._robots_store(key, _RobotsEntry("", None, False, self.cycle_time))
+                entry = (None, None, True)
+            elif resp[0] < 400:
+                body = resp[1]
+                entry = ((bytes(body) if body is not None else b"").decode(
+                    "utf-8", errors="replace"), None, False)
+            elif resp[0] in (404, 410) or (resp[0] == 500
+                                           and cfg.robots_ignore_server_error):
+                entry = ("", None, False)
             else:
-                self._robots_store(key, _RobotsEntry(None, status, False, self.cycle_time))
+                entry = (None, resp[0], False)
+            self.robots.put(key, _RobotsEntry(*entry, self.cycle_time))
         return wanted
 
     def _fetch_with_redirects(self, urls: list[str]) -> dict:
-        """Resolve each URL to a final (status, body), following 3xx up to
-        max_redirect_hops (robots fetch uses followRedirect=true —
-        Crawler.js:380-412). Small driver-side dimension fetch (robots URLs
-        are one per unique batch host — batch-bounded)."""
-        if self.config.fetch_mode == "http":
-            return self._fetch_with_redirects_http(urls)
+        """Resolve each URL to a final (status, body) or None (request
+        error), following 3xx up to max_redirect_hops (robots fetch uses
+        followRedirect=true — Crawler.js:380-412, 445-502). Small
+        driver-side dimension fetch: robots URLs are one per unique batch
+        host — batch-bounded, exactly as the reference fetches them. Each
+        hop fetches the distinct current URLs in one go: a broadcast-semi
+        job against web_pages in join mode, the configured transport per
+        URL in http mode."""
+        cfg = self.config
+        session = None
+        if cfg.fetch_mode == "http":
+            if cfg.fetch_transport is None:
+                import requests
+                session = requests.Session()
+            hop = functools.partial(self._http_hop, session)
+        else:
+            hop = self._join_hop
         result: dict[str, tuple[int, bytes] | None] = {}
         pending = {u: u for u in urls}  # original → current
-        for _ in range(self.config.max_redirect_hops):
-            if not pending:
-                break
-            current = list(set(pending.values()))
-            # broadcast semi-join instead of a giant In() predicate
-            # (isin with 1000+ hosts is a codegen-hostile expression)
-            want_df = local_df(self.spark, [{"url": u} for u in current],
-                               T.StructType([T.StructField("url", T.StringType())]))
-            rows = (self.web_pages
-                    .join(F.broadcast(want_df), "url")
-                    .select("url", "status_code", "body", "location").collect())
-            by_url = {r["url"]: r for r in rows}
-            nxt: dict[str, str] = {}
-            for orig, cur in pending.items():
-                r = by_url.get(cur)
-                if r is None:
-                    result[orig] = None
-                elif 300 <= r["status_code"] < 400 and r["location"]:
-                    nxt[orig] = urls_mod.resolve(cur, r["location"])
-                else:
-                    result[orig] = (int(r["status_code"]), r["body"])
-            pending = nxt
-        for orig in pending:
-            result[orig] = None  # redirect loop → request error
-        return result
-
-    def _fetch_with_redirects_http(self, urls: list[str]) -> dict:
-        """HTTP twin of _fetch_with_redirects for fetch_mode="http": the
-        same hop-following loop, but each hop goes through the configured
-        transport (reference robots fetch, followRedirect=true —
-        Crawler.js:445-502). Driver-side: robots URLs are a batch-bounded
-        host dimension, exactly as the reference fetches them."""
-        from . import webfetch as _wf
-        cfg = self.config
-        tp = cfg.fetch_transport or _wf._default_transport
-        session = None
-        if cfg.fetch_transport is None:
-            import requests
-            session = requests.Session()
-        ua_fn = cfg.user_agent if callable(cfg.user_agent) else None
-        result: dict[str, tuple[int, bytes] | None] = {}
-        pending = {u: u for u in urls}
         try:
             for _ in range(cfg.max_redirect_hops):
                 if not pending:
                     break
+                got = hop(list(dict.fromkeys(pending.values())))
                 nxt: dict[str, str] = {}
                 for orig, cur in pending.items():
-                    ua = ua_fn(cur) if ua_fn is not None else cfg.user_agent
-                    options = _wf.merge_request_options(
-                        {"headers": {"User-Agent": ua},
-                         "allow_redirects": False,
-                         "timeout": cfg.fetch_timeout_s},
-                        cfg.request_opts)
-                    try:
-                        status, _ct, loc, body = tp(session, cur, options)
-                    except Exception:
+                    r = got.get(cur)
+                    if r is None:
                         result[orig] = None
-                        continue
-                    if 300 <= status < 400 and loc:
-                        nxt[orig] = urls_mod.resolve(cur, loc)
+                    elif 300 <= r[0] < 400 and r[1]:
+                        nxt[orig] = urls_mod.resolve(cur, r[1])
                     else:
-                        result[orig] = (int(status), body)
+                        result[orig] = (int(r[0]), r[2])
                 pending = nxt
         finally:
             if session is not None:
@@ -1435,6 +1315,35 @@ class SparkCrawler:
         for orig in pending:
             result[orig] = None  # redirect loop → request error
         return result
+
+    def _join_hop(self, urls: list[str]) -> dict:
+        """url → (status, location, body) for the urls present in
+        web_pages — a broadcast semi-join instead of a giant In() predicate
+        (isin with 1000+ hosts is a codegen-hostile expression)."""
+        want_df = local_df(self.spark, [{"url": u} for u in urls],
+                           T.StructType([T.StructField("url", T.StringType())]))
+        rows = (self.web_pages.join(F.broadcast(want_df), "url")
+                .select("url", "status_code", "location", "body").collect())
+        return {r[0]: tuple(r[1:]) for r in rows}
+
+    def _http_hop(self, session, urls: list[str]) -> dict:
+        """url → (status, location, body) through the configured transport;
+        a URL whose request raises is left out (request error)."""
+        from . import webfetch as _wf
+        cfg = self.config
+        tp = cfg.fetch_transport or _wf._default_transport
+        out = {}
+        for u in urls:
+            ua = cfg.user_agent(u) if callable(cfg.user_agent) else cfg.user_agent
+            options = _wf.merge_request_options(
+                {"headers": {"User-Agent": ua}, "allow_redirects": False,
+                 "timeout": cfg.fetch_timeout_s}, cfg.request_opts)
+            try:
+                status, _ct, loc, body = tp(session, u, options)
+            except Exception:
+                continue
+            out[u] = (status, loc, body)
+        return out
 
     # ------------------------------------------------------------------
     # lineage / metrics

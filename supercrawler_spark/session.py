@@ -86,6 +86,19 @@ def _warm_session(spark: SparkSession) -> None:
     spark.conf.set("spark.supercrawler.warmed", "1")
 
 
+def _daemon_conf(master: str) -> dict:
+    """Fork Python workers from a daemon that has ALREADY imported
+    numpy/pandas/pyarrow (see pydaemon.py): copy-on-write makes every
+    forked worker start warm instead of re-importing the stack on first
+    use. Only for ``local*`` masters (``local-cluster`` included), whose
+    workers inherit this process's PYTHONPATH and so can import the
+    module; on any other master an executor may not have the package,
+    and Spark's stock daemon is kept."""
+    if master.startswith("local"):
+        return {"spark.python.daemon.module": "supercrawler_spark.pydaemon"}
+    return {}
+
+
 def _default_driver_memory() -> str:
     """A quarter of physical RAM, between 1 and 8 GiB: a fixed large heap
     lets the JVM grow past what a small host can back and get OOM-killed."""
@@ -110,11 +123,6 @@ def get_spark(app_name: str = "supercrawler-spark", master: str | None = None,
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # fork Python workers from a daemon that has ALREADY imported
-        # numpy/pandas/pyarrow (see pydaemon.py): copy-on-write makes
-        # every forked worker start warm instead of re-importing the
-        # stack on first use (guide §4.5 at the process-pool level)
-        .config("spark.python.daemon.module", "supercrawler_spark.pydaemon")
         # keep Arrow batches bounded in BYTES for fat binary rows (a 10k-row
         # batch of 14KB pages is 140MB/worker — at 32 workers that thrashes);
         # 2k rows caps a body batch at ~30MB while analytic columns stay fast
@@ -127,7 +135,7 @@ def get_spark(app_name: str = "supercrawler-spark", master: str | None = None,
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_daemon_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     _warm_session(spark)

@@ -11,8 +11,8 @@ robots fetch. Network failures surface as NULL status → REQUEST_ERROR,
 exactly like the fixture join's missing rows.
 
 The sandbox has no network; this module is import-gated and covered by a
-schema/shape unit test with a stubbed transport. Swapping it in for the
-fixture join is one line in SparkCrawler (web_pages → fetch_stage output).
+schema/shape unit test with a stubbed transport. The crawl swaps it in for
+the fixture join with ``CrawlConfig(fetch_mode="http")``.
 """
 
 from __future__ import annotations

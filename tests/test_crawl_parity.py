@@ -9,6 +9,7 @@ import tempfile
 
 import pytest
 
+from supercrawler_spark import crawler as crawler_mod
 from supercrawler_spark import fixtures
 from supercrawler_spark.crawler import CrawlConfig, SparkCrawler
 from supercrawler_spark.oracle import OracleConfig, OracleCrawler, web_pages_dict
@@ -75,15 +76,14 @@ def test_decay_priority_parity(spark, small_web):
     cr, res = run_pair(spark, seeds, web_pdf, web_df, budget=4, mode="decay",
                        virtual_start_ms=1e12)
     assert_parity(cr, res)
-    assert cr.host_delay  # state carried
+    assert cr.host_delay.memo  # state carried
     # oracle's host_delay must match the engine's final state
     ora = OracleCrawler(web_pages_dict(web_pdf),
                         OracleConfig(budget=4, order_mode="decay",
                                      virtual_start_ms=1e12))
     ora.seed(list(seeds["url"]))
     ora.crawl(max_rounds=100)
-    for h in cr.host_delay:
-        d_e, l_e = cr.host_delay[h]
+    for h, (d_e, l_e) in cr.host_delay.memo.items():
         d_o, l_o = ora.host_delay[h]
         assert abs(d_e - d_o) < 1e-9 and l_e == l_o
 
@@ -219,18 +219,18 @@ def test_image_payload_invariants(spark, small_web):
         assert fix["caption"] == f"synthetic caption {int(fix['image_id'][4:])} for {fix['image_id']}"
 
 
-def test_distributed_seq_assignment_parity(spark, small_web):
+def test_distributed_seq_assignment_parity(spark, small_web, monkeypatch):
     """Forcing the range-partitioned offset seq scheme on EVERY cycle
-    (seq_partition_threshold=0) yields bit-identical crawl order and
+    (SEQ_PARTITION_THRESHOLD=0) yields bit-identical crawl order and
     frontier seqs vs the flat-window path — the sitemap-dump scale path
     has the same semantics."""
     seeds, web, web_df = small_web
     results = []
     for threshold in (0, 1 << 30):
+        monkeypatch.setattr(crawler_mod, "SEQ_PARTITION_THRESHOLD", threshold)
         wd = tempfile.mkdtemp()
         cr = SparkCrawler(spark, web_df, wd,
-                          CrawlConfig(budget=6, order_mode="random",
-                                      seq_partition_threshold=threshold))
+                          CrawlConfig(budget=6, order_mode="random"))
         cr.seed(list(seeds["url"]))
         cr.crawl(max_cycles=60)
         pdf = cr.frontier_pdf()
@@ -263,7 +263,7 @@ def test_decay_resume_and_table_carried_host_state(spark, small_web):
     c_b1 = SparkCrawler(spark, web_df, wd_b, cfg())
     c_b1.seed(list(seeds["url"]))
     c_b1.crawl(max_cycles=2)
-    assert c_b1._host_delay_base is not None  # table committed
+    assert c_b1.host_delay.base is not None  # table committed
     # manifest meta holds only scalars — no host map
     with open(os.path.join(wd_b, "snapshots", "manifest.json")) as f:
         manifest = json.load(f)
@@ -273,8 +273,8 @@ def test_decay_resume_and_table_carried_host_state(spark, small_web):
     c_b2 = SparkCrawler(spark, web_df, wd_b, cfg())
     assert c_b2.resume()
     # state restored lazily from the table, not the manifest
-    looked = c_b2._host_delay_lookup(
-        [h for h in {u.split("/")[2] for _, _, u in c_b1.crawl_order}])
+    looked = c_b2.host_delay.lookup(
+        spark, [h for h in {u.split("/")[2] for _, _, u in c_b1.crawl_order}])
     assert looked  # decayed hosts present in the table
     c_b2.crawl(max_cycles=100)
 
@@ -330,8 +330,9 @@ def test_collect_events_off_no_per_url_driver_rows(spark, small_web):
     batch, the outcome fold, or any frontier-shaped frame. Final crawl
     state must still exactly match the oracle (the executor-side upsert
     delta / crawl_log derivation is the same lineage, minus the
-    driver round-trip)."""
-    from pyspark.sql import DataFrame
+    driver round-trip). The spy goes on the session's concrete DataFrame
+    class, which overrides collect/toPandas."""
+    DataFrame = type(spark.range(0))
 
     seeds, web_pdf, web_df = small_web
     wd = tempfile.mkdtemp()
@@ -360,6 +361,7 @@ def test_collect_events_off_no_per_url_driver_rows(spark, small_web):
     # outcome fold carry batch_idx, frontier rows carry seq, fetch rows
     # carry f_body. (Robots fetches collect url/status/body rows — they
     # are PER-HOST, allowed by the contract, and carry none of these.)
+    assert collected, "the spy saw no collect: it is not on the session's class"
     leaked = [s for s in collected
               if any(f.name in ("batch_idx", "seq", "f_body")
                      for f in s.fields)]
@@ -371,3 +373,27 @@ def test_collect_events_off_no_per_url_driver_rows(spark, small_web):
     ora.seed(list(seeds["url"]))
     res = ora.crawl(max_rounds=100)
     assert_parity(cr, res, check_order=False)
+
+
+@pytest.mark.parametrize("mode", ["random", "decay"])
+def test_host_state_memo_evicts_without_changing_the_crawl(
+        spark, small_web, monkeypatch, mode):
+    """A one-entry host-state memo evicts on nearly every put and lookup,
+    so robots entries and decay delays are served from the dirty set and,
+    after each commit (checkpoint_every=1), from the snapshot table. The
+    crawl must not notice: same order and final per-URL state as the
+    oracle."""
+    monkeypatch.setattr(crawler_mod, "HOST_MEMO_SIZE", 1)
+    seeds, web_pdf, web_df = small_web
+    kw = {"virtual_start_ms": 1e12} if mode == "decay" else {}
+    wd = tempfile.mkdtemp()
+    cr = SparkCrawler(spark, web_df, wd,
+                      CrawlConfig(budget=4, order_mode=mode,
+                                  checkpoint_every=1, **kw))
+    cr.seed(list(seeds["url"]))
+    cr.crawl(max_cycles=100)
+    assert len(cr.robots.memo) <= 1 and len(cr.host_delay.memo) <= 1
+    ora = OracleCrawler(web_pages_dict(web_pdf),
+                        OracleConfig(budget=4, order_mode=mode, **kw))
+    ora.seed(list(seeds["url"]))
+    assert_parity(cr, ora.crawl(max_rounds=100))

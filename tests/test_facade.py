@@ -231,7 +231,7 @@ def test_redis_url_list_mode(spark, web_df):
     crawler.queue_url("http://host1.example/index.html")
     crawler.start(max_cycles=30)
     assert len(crawler.engine.seen_urls()) > 10
-    assert crawler.engine.host_delay  # decay state maintained
+    assert crawler.engine.host_delay.memo  # decay state maintained
 
 
 def test_insert_if_not_exists_returns_url_record(spark, web_df):

@@ -23,6 +23,19 @@ def test_daemon_module_conf_set(spark):
         "supercrawler_spark.pydaemon"
 
 
+def test_daemon_module_only_on_local_masters():
+    """The pre-importing daemon is wired only where executors inherit the
+    driver's PYTHONPATH (local and local-cluster masters); elsewhere
+    Spark's stock daemon stays."""
+    from supercrawler_spark.session import _daemon_conf
+    for master in ("local", "local[4]", "local[*]", "local-cluster[2,1,1024]"):
+        assert _daemon_conf(master) == {
+            "spark.python.daemon.module": "supercrawler_spark.pydaemon"}, master
+    for master in ("spark://head:7077", "yarn", "k8s://https://api:6443",
+                   "mesos://zk:2181"):
+        assert _daemon_conf(master) == {}, master
+
+
 def test_warm_flag_recorded(spark):
     # get_spark ran _warm_session on this (session-scoped) fixture
     assert spark.conf.get("spark.supercrawler.warmed") == "1"
