@@ -16,7 +16,8 @@ Design — the filter IS a distributed table, never driver-resident:
   hashing at all); the batch arrays OR-merge into the existing bitset table
   via a full-outer join on pid + an Arrow-batched binary OR. The bit matrix
   NEVER materializes on the driver: the only driver transfer in add() is
-  one scalar row count. At 10^10 keys (~12 GB of bits) nothing round-trips.
+  one scalar row count, observed by the merge job itself. At 10^10 keys
+  (~12 GB of bits) nothing round-trips.
 - probe (``maybe_seen_flag``): candidates shuffle by pid and cogroup
   against the bitset table — each of the P partition arrays travels
   exactly once, to the task that owns that url_hash range; neither the
@@ -36,7 +37,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -78,6 +79,14 @@ def _or_bitsets(a: pd.Series, b: pd.Series) -> pd.Series:
 
 
 class PartitionedBloom:
+    # the table ``to_df`` writes: the bitsets plus scalar meta columns
+    SNAPSHOT_SCHEMA = T.StructType(_TABLE_SCHEMA.fields + [
+        T.StructField("m", T.LongType()),
+        T.StructField("k", T.LongType()),
+        T.StructField("n_added", T.LongType()),
+        T.StructField("p", T.IntegerType()),
+    ])
+
     def __init__(self, partitions: int = 32, capacity: int = 1 << 20,
                  bits_per_key: int = 10):
         self.P = partitions
@@ -106,7 +115,9 @@ class PartitionedBloom:
         """Distributed build + merge: per-partition batch bit arrays
         (applyInPandas UDAF) full-outer-join the existing bitset table on
         pid and OR-merge executor-side. The bit matrix never reaches the
-        driver — the only collect is one scalar (rows added). Returns it."""
+        driver — the one scalar (rows added) comes from an Observation on
+        the merge's checkpoint job, so no other job runs. Returns it; when
+        it is 0 the filter is left exactly as it was."""
         m, k = self.m, self.k
 
         schema = T.StructType([
@@ -127,24 +138,27 @@ class PartitionedBloom:
 
         hashed = self._with_hashes(df, col).select("_h1", "_h2", "_pid")
         batch = hashed.groupBy("_pid").applyInPandas(build, schema=schema)
-        batch = batch.persist()
-        total = batch.agg(F.sum("n").alias("s")).first()["s"]  # scalar only
-        total = int(total) if total is not None else 0
-        if total == 0:
-            batch.unpersist()
-            return 0
-        new_bits = batch.select("pid", F.col("bitset").alias("_new"))
+        new_bits = batch.select("pid", F.col("bitset").alias("_new"), "n")
         if self._table is None:
-            merged = new_bits.select("pid", F.col("_new").alias("bitset"))
+            merged = new_bits.select("pid", F.col("_new").alias("bitset"), "n")
         else:
             old = self._table.select("pid", F.col("bitset").alias("_old"))
             merged = (old.join(new_bits, "pid", "full_outer")
                       .select("pid", _or_bitsets(F.col("_old"), F.col("_new"))
-                              .alias("bitset")))
+                              .alias("bitset"), "n"))
+        # the batch's row counts ride through the merge, so the frame the
+        # checkpoint runs is the one observed: an Observation completes
+        # only through its own frame's session, and ``df`` may come from
+        # another (a streaming micro-batch runs in a cloned session).
         # eager localCheckpoint: truncates the merge lineage (cost per add
         # stays O(P rows), not O(history)) and materializes executor-side
-        self._table = merged.localCheckpoint(eager=True)
-        batch.unpersist()
+        added = Observation()
+        merged = (merged.observe(added, F.sum("n").alias("n"))
+                  .localCheckpoint(eager=True))
+        total = int(added.get["n"] or 0)
+        if total == 0:
+            return 0
+        self._table = merged.select("pid", "bitset")
         self.n_added += total
         return total
 
@@ -307,13 +321,16 @@ class PartitionedBloom:
         columns (column-pruned — no bitset bytes cross the driver) and
         re-roots the bitset table on the parquet via localCheckpoint so a
         later snapshot GC can't pull the files out from under it."""
-        meta = df.select("m", "k", "n_added",
-                         *(["p"] if "p" in df.columns else [])).first()
+        has_p = "p" in df.columns
+        meta = df.select("m", "k", "n_added", *(["p"] if has_p else [])).first()
         obj = cls.__new__(cls)
         obj.m = int(meta["m"])
         obj.k = int(meta["k"])
         obj.n_added = int(meta["n_added"])
-        obj.P = int(meta["p"]) if "p" in df.columns else int(df.count())
+        # a table written before ``p`` existed has no such column, or (read
+        # with SNAPSHOT_SCHEMA) a null one: one row per partition
+        p = meta["p"] if has_p else None
+        obj.P = int(p) if p is not None else int(df.count())
         obj._table = df.select("pid", "bitset").localCheckpoint(eager=True)
         obj._last_flagged = None
         return obj

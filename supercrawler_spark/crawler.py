@@ -53,7 +53,7 @@ from typing import NamedTuple
 
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -111,6 +111,7 @@ _KERNEL_OUT_SCHEMA = T.StructType([
     T.StructField("batch_idx", T.LongType()),
     T.StructField("link_idx", T.LongType()),
     T.StructField("link", T.StringType()),
+    T.StructField("host", T.StringType()),
     T.StructField("handlers_error", T.StringType()),
 ])
 
@@ -341,9 +342,11 @@ class CrawlConfig:
     # .results (the facade's crawlurl/crawledurl/... event payloads). True
     # by default for reference parity; the facade re-derives it each cycle
     # from whether any per-URL listener is attached. When False the cycle
-    # collects ONLY scalars + per-host robots keys — the batch, the
-    # outcome fold, the upsert delta and the crawl_log rows all stay
-    # executor-resident (O13: no driver round-trip of 10^6-row cycles)
+    # collects ONLY scalars (the link count; the other counters are
+    # Observations on jobs the cycle runs anyway) + per-host robots keys —
+    # the batch, the outcome fold, the upsert delta and the crawl_log rows
+    # all stay executor-resident (O13: no driver round-trip of 10^6-row
+    # cycles)
     initial_retry_ms: float = HOUR_MS    # DbUrlList.js:81
     recrawl_ms: float = YEAR_MS          # DbUrlList.js:7,36
     checkpoint_every: int = 8            # parquet snapshot cadence (cycles)
@@ -502,7 +505,7 @@ class SparkCrawler:
         """Rebase onto the last committed snapshot: the parquet just
         written becomes the base layer (scan-pruned by next_fetch_time
         row-group stats) and the delta resets."""
-        base = self.store.load(self.spark, "frontier")
+        base = self.store.load(self.spark, "frontier", FRONTIER_SCHEMA)
         if base is not None:
             self._base = base
             self._delta = None
@@ -584,8 +587,8 @@ class SparkCrawler:
         else:
             nft = (F.lit(self.cycle_time)
                    - SF.deterministic_priority(F.col("url")) * F.lit(YEAR_MS))
-        rows = _unfetched(seqd.withColumn("next_fetch_time", nft).withColumn(
-            "host", F.lower(F.parse_url(F.col("url"), F.lit("HOST")))))
+        rows = _unfetched(seqd.withColumn("next_fetch_time", nft)
+                          .withColumn("host", SF.hostname_udf(F.col("url"))))
         # stage lazily and commit straight to the parquet base — a web-scale
         # seed list must not pass through an in-memory delta checkpoint;
         # the snapshot write is the single materialization
@@ -621,7 +624,8 @@ class SparkCrawler:
         had seen/scheduled as of an earlier commit without touching the
         live LSM view. Versions older than the store's keep_last are GC'd;
         ``self.store.versions()`` lists what is retained."""
-        return self.store.load_as_of(self.spark, "frontier", version)
+        return self.store.load_as_of(self.spark, "frontier", version,
+                                     FRONTIER_SCHEMA)
 
     def resume(self) -> bool:
         """Restart from the last committed snapshot (north_rule checkpoint
@@ -631,14 +635,12 @@ class SparkCrawler:
             return False
         meta = manifest["meta"]
         # parquet-backed base layer: the due-scan prunes on row-group stats
-        self._base = self.store.load(self.spark, "frontier")
-        self._delta = None
+        self._compact()
         # host state resumes as TABLES — no collect of all hosts; rows are
         # looked up per batch as the crawl touches them
-        self.robots = HostStateTable(ROBOTS_SCHEMA, _RobotsEntry._make,
-                                     self.store.load(self.spark, "robots"))
-        self.host_delay = HostStateTable(
-            HOST_DELAY_SCHEMA, base=self.store.load(self.spark, "host_delay"))
+        self.robots = HostStateTable(ROBOTS_SCHEMA, _RobotsEntry._make)
+        self.host_delay = HostStateTable(HOST_DELAY_SCHEMA)
+        self._rebase_host_state()
         self.max_seq = meta["max_seq"]
         self.cycle_id = meta["cycle_id"]
         self.cycle_time = meta["cycle_time"]
@@ -647,7 +649,8 @@ class SparkCrawler:
             # already-crawled URLs "definitively new", bypass the exact
             # anti-join, and re-insert duplicate frontier rows
             from .bloom import PartitionedBloom
-            bloom_df = self.store.load(self.spark, "bloom")
+            bloom_df = self.store.load(self.spark, "bloom",
+                                       PartitionedBloom.SNAPSHOT_SCHEMA)
             if bloom_df is not None:
                 self._bloom = PartitionedBloom.from_df(bloom_df)
             else:
@@ -664,11 +667,13 @@ class SparkCrawler:
                   .repartition(shuffle_partitions(self.spark), "host")
                   .sortWithinPartitions("next_fetch_time")}
         # host-state tables: dirty rows overlaid on the previous table —
-        # same LSM shape as the frontier (host_delay only in decay mode)
-        states = {"robots": self.robots}
-        if self.config.order_mode == "decay":
-            states["host_delay"] = self.host_delay
-        tables.update((name, st.table(self.spark)) for name, st in states.items())
+        # same LSM shape as the frontier, written in key order so the same
+        # state always writes the same files
+        tables.update(
+            (name, st.table(self.spark)
+             .repartition(shuffle_partitions(self.spark), st.key)
+             .sortWithinPartitions(st.key))
+            for name, st in self._host_states().items())
         if self._bloom is not None:
             tables["bloom"] = self._bloom.to_df(self.spark)
         # meta carries ONLY scalars — per-host decay state is a table now
@@ -683,14 +688,27 @@ class SparkCrawler:
         # the delta resets — the only O(|frontier|) write, amortized over
         # checkpoint_every cycles
         self._compact()
-        for name, st in states.items():
-            st.rebase(self.store.load(self.spark, name))
+        self._rebase_host_state()
         if self._bloom is not None:
             # re-root the bitset table on the parquet just written (frees
             # the executor-side checkpoint blocks; bits are unchanged)
-            bloom_df = self.store.load(self.spark, "bloom")
+            bloom_df = self.store.load(self.spark, "bloom",
+                                       self._bloom.SNAPSHOT_SCHEMA)
             if bloom_df is not None:
                 self._bloom.rebase(bloom_df)
+
+    def _host_states(self) -> dict[str, HostStateTable]:
+        """The snapshot-carried host-state tables by table name
+        (host_delay only in decay mode)."""
+        states = {"robots": self.robots}
+        if self.config.order_mode == "decay":
+            states["host_delay"] = self.host_delay
+        return states
+
+    def _rebase_host_state(self) -> None:
+        """Point each host-state table at its last committed version."""
+        for name, st in self._host_states().items():
+            st.rebase(self.store.load(self.spark, name, st.schema))
 
     # ------------------------------------------------------------------
     # the micro-cycle
@@ -727,11 +745,13 @@ class SparkCrawler:
         robots_inserts: list[tuple[int, str]] = []  # (batch_idx, robots_url)
         key_firsts: list[tuple[int, str]] = []
         if cfg.robots_enabled:
-            key_firsts = [
+            # one row per key, first_idx unique: sorting them here saves
+            # the range-sampling job a Spark orderBy would run
+            key_firsts = sorted(
                 (int(r["first_idx"]), r["robots_key"])
                 for r in (frame.groupBy("robots_key")
                           .agg(F.min("batch_idx").alias("first_idx"))
-                          .orderBy("first_idx").collect())]
+                          .collect()))
             robots_inserts = self._refresh_robots(key_firsts)
 
         batch_df = frame.select(
@@ -793,15 +813,22 @@ class SparkCrawler:
             # broadcast INTO the web table: one streaming scan of web_pages
             # per cycle, bodies never shuffled or broadcast. URLs absent
             # from the web surface as f_status NULL → REQUEST_ERROR
-            # (connection-failure analog).
+            # (connection-failure analog). f_status is cast to the
+            # frontier's int status_code: a web table with long statuses
+            # would otherwise widen the frontier's column, and the snapshot
+            # loads read with FRONTIER_SCHEMA.
             pages = self.web_pages.select(
                 "url",
-                F.col("status_code").alias("f_status"),
+                F.col("status_code").cast("int").alias("f_status"),
                 F.col("content_type").alias("f_content_type"),
                 F.col("location").alias("f_location"),
                 F.col("body").alias("f_body"),
             )
-            found = pages.join(F.broadcast(batch_df), "url", "inner").persist()
+            # the batch is the join's left side so every frame derived from
+            # it stays in the crawler's session even when web_pages comes
+            # from another: an Observation on such a frame (new_rows)
+            # completes only through an action in its own session
+            found = F.broadcast(batch_df).join(pages, "url", "inner").persist()
             if self.plan_sink is not None:
                 self.plan_sink["fetch_join"] = plan_str(found)
 
@@ -823,7 +850,8 @@ class SparkCrawler:
                           .select("batch_idx", "handlers_error"))
         links_df = (kernel_out
                     .filter(F.col("link").isNotNull())
-                    .select("batch_idx", "link_idx", F.col("link").alias("url")))
+                    .select("batch_idx", "link_idx", F.col("link").alias("url"),
+                            "host"))
         if cfg.collect_links:
             # reference `links` event payload (Crawler.js:260): the page's
             # discovered links in handler order, before dedup
@@ -875,12 +903,19 @@ class SparkCrawler:
 
         # results is batch-sized and stays EXECUTOR-RESIDENT: the upsert
         # delta, the crawl_log rows and the cycle metrics all derive from
-        # it as DataFrame lineage; the driver collects only the per-cycle
-        # scalar counters. Full rows cross to the driver ONLY when
-        # collect_events asks for the facade's per-URL event payloads.
+        # it as DataFrame lineage; its two counters are observed by the
+        # delta fold's job, which always reads it. Full rows cross to the
+        # driver ONLY when collect_events asks for the facade's per-URL
+        # event payloads.
+        outcome_counts = Observation()
         results = (results
                    .select("batch_idx", "url", "num_errors", "status_out",
                            "error_code", "error_message", "f_location")
+                   .observe(outcome_counts,
+                            F.count(F.when(F.col("error_code")
+                                           == "ROBOTS_NOT_ALLOWED",
+                                           F.lit(1))).alias("robots_denied"),
+                            F.count(F.col("error_code")).alias("errors"))
                    .persist())
         if cfg.collect_events:
             stats.results = [r.asDict() for r in results.collect()]
@@ -891,11 +926,13 @@ class SparkCrawler:
         if robots_inserts:
             robots_links = local_df(
                 self.spark,
-                [{"batch_idx": bi, "link_idx": 0, "url": u} for bi, u in robots_inserts],
+                [{"batch_idx": bi, "link_idx": 0, "url": u,
+                  "host": urls_mod.hostname_of(u)} for bi, u in robots_inserts],
                 T.StructType([
                     T.StructField("batch_idx", T.LongType()),
                     T.StructField("link_idx", T.LongType()),
                     T.StructField("url", T.StringType()),
+                    T.StructField("host", T.StringType()),
                 ])).withColumn("source_order", F.lit(0))
             links_all = robots_links.unionByName(links_all)
 
@@ -914,13 +951,16 @@ class SparkCrawler:
             # links (common on the web — nav bars, footers) collapse before
             # the url-key exchange, and there is no per-group sort. The
             # window form shuffles every duplicate row then sorts each group.
+            # host rides last in the struct: it is a function of url, so it
+            # never decides the min.
             links_unique = (links_all
                             .groupBy("url")
                             .agg(F.min(F.struct("batch_idx", "source_order",
-                                                "link_idx")).alias("_k"))
+                                                "link_idx", "host")).alias("_k"))
                             .select("url", F.col("_k.batch_idx").alias("batch_idx"),
                                     F.col("_k.source_order").alias("source_order"),
-                                    F.col("_k.link_idx").alias("link_idx")))
+                                    F.col("_k.link_idx").alias("link_idx"),
+                                    F.col("_k.host").alias("host")))
 
             # dedup vs the seen set (= the whole frontier): Bloom-prefiltered
             # (scale path), and the exact verify streams the frontier
@@ -950,10 +990,7 @@ class SparkCrawler:
                 seqd = links_unique.withColumn(
                     "seq",
                     F.lit(self.max_seq) + F.row_number().over(w_seq).cast("long"))
-            base = (seqd.withColumn("t_insert", t_row)
-                    # JVM-side host extraction (handler links are already
-                    # canonicalized to lowercase hosts)
-                    .withColumn("host", F.lower(F.parse_url(F.col("url"), F.lit("HOST")))))
+            base = seqd.withColumn("t_insert", t_row)
             if cfg.order_mode == "fifo":
                 base = base.withColumn("next_fetch_time", F.lit(0.0))
             elif cfg.order_mode == "decay":
@@ -963,10 +1000,15 @@ class SparkCrawler:
                     "next_fetch_time",
                     F.col("t_insert")
                     - SF.deterministic_priority(F.col("url")) * F.lit(YEAR_MS))
-            new_rows = _unfetched(base).persist()
+            # count and max seq are observed by the delta fold's job,
+            # which materializes these rows
+            inserted = Observation()
+            new_rows = (_unfetched(base)
+                        .observe(inserted, F.count(F.lit(1)).alias("n"),
+                                 F.max("seq").alias("max_seq"))
+                        .persist())
         else:
             new_rows = None  # zero discovered links → nothing to dedup/insert
-        prev_max_seq = self.max_seq
 
         # --- upsert merge (S6: MERGE WHEN MATCHED UPDATE / NOT MATCHED
         # INSERT). The update side touches ONLY the popped batch rows: their
@@ -1033,15 +1075,20 @@ class SparkCrawler:
                         else frame.select("url")
                                   .unionByName(new_rows.select("url")))
         self._apply_changes(changes, keys=changed_keys)
-        # the delta checkpoint materialized new_rows — read back the new max
-        # seq from the (small) delta instead of scanning the frontier
-        new_max = self._delta.agg(F.max("seq").alias("m")).collect()[0]["m"]
-        self.max_seq = max(prev_max_seq,
-                           int(new_max) if new_max is not None else -1)
-        n_new = self.max_seq - prev_max_seq
-        stats.links_new = int(n_new)
+        n_new = 0
+        if new_rows is not None:
+            got = inserted.get
+            n_new = int(got["n"])
+            if n_new:
+                # seqs are dense from max_seq + 1
+                if int(got["max_seq"]) != self.max_seq + n_new:
+                    raise RuntimeError(
+                        f"new rows' seqs are not dense: {n_new} rows after "
+                        f"{self.max_seq}, max {got['max_seq']}")
+                self.max_seq += n_new
+        stats.links_new = n_new
         stats.dedup_hits = int(n_links - n_new)
-        if self._bloom is not None and n_new and new_rows is not None:
+        if self._bloom is not None and n_new:
             self._bloom.add(self.spark, new_rows.select("url"))
             self._maybe_rebuild_bloom()
         kernel_out.unpersist()
@@ -1051,7 +1098,7 @@ class SparkCrawler:
                 df.unpersist()
 
         # --- lineage / metrics (S7, A5) -------------------------------------
-        self._log_cycle(results, stats)
+        self._log_cycle(results, outcome_counts, stats)
 
         self.cycle_time += cfg.interval_ms * n_popped
         self.cycle_id += 1
@@ -1166,7 +1213,8 @@ class SparkCrawler:
     def _pop_batch(self) -> tuple[DataFrame, int]:
         """Pop the cycle's politeness batch. Returns (frame, n): an
         executor-pinned DataFrame of FRONTIER_SCHEMA + batch_idx +
-        robots_key, and its row count. No per-URL driver transfer."""
+        robots_key, and its row count — observed by the pinning job
+        itself, so no job runs for it. No per-URL driver transfer."""
         cfg = self.config
         if cfg.order_mode == "fifo":
             due = self.frontier.filter(
@@ -1214,8 +1262,10 @@ class SparkCrawler:
         else:
             frame = frame.withColumn(
                 "robots_key", F.lit(None).cast("string"))
-        frame = frame.localCheckpoint(eager=True)
-        return frame, int(frame.count())
+        popped = Observation()
+        frame = (frame.observe(popped, F.count(F.lit(1)).alias("n"))
+                 .localCheckpoint(eager=True))
+        return frame, int(popped.get["n"])
 
     # ------------------------------------------------------------------
     # robots layer (S5/F2/F3/T6) — host-keyed table + bounded LRU memo
@@ -1348,11 +1398,14 @@ class SparkCrawler:
     # ------------------------------------------------------------------
     # lineage / metrics
     # ------------------------------------------------------------------
-    def _log_cycle(self, results: DataFrame, stats: CycleStats) -> None:
+    def _log_cycle(self, results: DataFrame, outcome_counts: Observation,
+                   stats: CycleStats) -> None:
         """Buffer lineage events executor-side (a DataFrame projection of
         the persisted outcome fold — per-URL rows never reach the driver)
         and per-cycle metrics as driver scalars; both flushed as parquet at
-        each snapshot commit so checkpoint/resume carries the lineage."""
+        each snapshot commit so checkpoint/resume carries the lineage.
+        ``outcome_counts`` holds the robots-denied and error counts,
+        observed on ``results`` by the delta fold's job."""
         self._log_df_buffer.append(results.select(
             F.lit(self.cycle_id).cast("long").alias("cycle_id"),
             F.col("batch_idx"),
@@ -1371,13 +1424,9 @@ class SparkCrawler:
             stats.errors = sum(
                 1 for r in stats.results if r["error_code"] is not None)
         else:
-            counts = results.agg(
-                F.count(F.when(F.col("error_code") == "ROBOTS_NOT_ALLOWED",
-                               F.lit(1))).alias("rd"),
-                F.count(F.when(F.col("error_code").isNotNull(),
-                               F.lit(1))).alias("er")).collect()[0]
-            stats.robots_denied = int(counts["rd"])
-            stats.errors = int(counts["er"])
+            counts = outcome_counts.get
+            stats.robots_denied = int(counts["robots_denied"])
+            stats.errors = int(counts["errors"])
         self._metrics_buffer.append({
             "cycle_id": self.cycle_id,
             "popped": stats.popped,
@@ -1422,7 +1471,8 @@ class SparkCrawler:
 def _make_handler_kernel(registry: HandlerRegistry):
     """Vectorized UDTF: one mapInPandas pass runs redirect extraction and ALL
     matching handlers per page (shared parse — reference O8). Emits
-    (batch_idx, link_idx, link, handlers_error) rows."""
+    (batch_idx, link_idx, link, host, handlers_error) rows; ``host`` is
+    ``urls.hostname_of(link)``, the oracle's own host function."""
 
     def kernel(batches):
         for pdf in batches:
@@ -1452,6 +1502,9 @@ def _make_handler_kernel(registry: HandlerRegistry):
                 "batch_idx": pd.Series(out_bi, dtype="int64"),
                 "link_idx": pd.Series(out_li, dtype="int64"),
                 "link": pd.Series(out_link, dtype="object"),
+                "host": pd.Series([urls_mod.hostname_of(u) if u is not None
+                                   else None for u in out_link],
+                                  dtype="object"),
                 "handlers_error": pd.Series(out_err, dtype="object"),
             })
 

@@ -12,20 +12,30 @@ This is the optimization guide's §4.5 ("initialise heavyweight state
 once, not per row or per batch") applied one level up, at the worker
 process pool itself.
 
+Each worker is one of many on the host (one per core), so the BLAS and
+OpenMP thread pools are pinned to one thread before numpy loads them —
+a pool per worker sized to the whole host oversubscribes the cores. A
+value already set in the environment wins.
+
 Wired by session.get_spark via ``spark.python.daemon.module``; any
 deployment that ships this package to the executors (--py-files, pip,
 a cluster image) can use the same conf. The imports are best-effort so
 the daemon still comes up on a minimal image without the numeric stack.
 """
 
+import os
+
+for _var in ("OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS", "OMP_NUM_THREADS"):
+    os.environ.setdefault(_var, "1")
+
 try:
-    import numpy  # noqa: F401
-    import pandas  # noqa: F401
-    import pyarrow  # noqa: F401
+    import numpy  # noqa: F401,E402
+    import pandas  # noqa: F401,E402
+    import pyarrow  # noqa: F401,E402
 except Exception:  # pragma: no cover - minimal images only
     pass
 
-from pyspark.daemon import manager
+from pyspark.daemon import manager  # noqa: E402
 
 if __name__ == "__main__":
     manager()

@@ -133,6 +133,10 @@ def get_spark(app_name: str = "supercrawler-spark", master: str | None = None,
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM")
                 or _default_driver_memory())
         .config("spark.ui.enabled", "false")
+        # one crawl cycle compiles ~140-175 distinct generated classes; at
+        # the default 100 entries the cache thrashes and every cycle
+        # recompiles them all (a static conf: set before the session exists)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.session.timeZone", "UTC")
     )
     for k, v in {**_daemon_conf(master), **(extra_conf or {})}.items():

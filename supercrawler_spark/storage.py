@@ -24,6 +24,16 @@ import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+
+def _read(spark: SparkSession, path: str,
+          schema: T.StructType | None) -> DataFrame:
+    """A parquet table read with the caller's ``schema`` when it knows it:
+    reading without one runs a job that infers the schema from the file
+    footers."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 class SnapshotStore:
@@ -96,15 +106,15 @@ class SnapshotStore:
         with open(path) as f:
             return json.load(f)
 
-    def load_as_of(self, spark: SparkSession, name: str,
-                   version: int) -> DataFrame | None:
+    def load_as_of(self, spark: SparkSession, name: str, version: int,
+                   schema: T.StructType | None = None) -> DataFrame | None:
         """Read table ``name`` AS OF a retained snapshot version — the
         Iceberg time-travel analog (`VERSION AS OF`). Returns None if the
         version was GC'd or never carried that table."""
         m = self.manifest_as_of(version)
         if m is None or name not in m.get("tables", {}):
             return None
-        return spark.read.parquet(m["tables"][name])
+        return _read(spark, m["tables"][name], schema)
 
     def _gc(self, current: int, keep_last: int) -> None:
         for entry in os.listdir(self.root):
@@ -112,11 +122,14 @@ class SnapshotStore:
                 if int(entry[1:]) <= current - keep_last:
                     shutil.rmtree(os.path.join(self.root, entry), ignore_errors=True)
 
-    def load(self, spark: SparkSession, name: str) -> DataFrame | None:
+    def load(self, spark: SparkSession, name: str,
+             schema: T.StructType | None = None) -> DataFrame | None:
+        """Table ``name`` of the current snapshot, read with ``schema``
+        when given (no schema-inference job), or None."""
         manifest = self.read_manifest()
         if manifest is None or name not in manifest["tables"]:
             return None
-        return spark.read.parquet(manifest["tables"][name])
+        return _read(spark, manifest["tables"][name], schema)
 
     def meta(self) -> dict:
         manifest = self.read_manifest()

@@ -195,10 +195,13 @@ def test_add_never_ships_bitsets_to_driver(spark, url_sets):
     try:
         n = bloom.add(spark, seen)
         bloom.add(spark, cand)  # second add exercises the OR-merge join
+        seen.limit(1).collect()  # proves the spy records collects
     finally:
         DataFrame.collect, DataFrame.toPandas = orig_collect, orig_topandas
     assert n == 20000
-    assert collected_schemas  # the spy saw add()'s scalar collects
+    # the spy saw only its own probe: add() collects nothing at all (its
+    # one scalar comes from an Observation on the merge job)
+    assert collected_schemas == [seen.schema]
     binary_fields = [
         (schema, f.name) for schema in collected_schemas
         for f in schema.fields if isinstance(f.dataType, T.BinaryType)]
@@ -338,3 +341,39 @@ def test_engine_rebuilds_saturated_bloom(spark, tmp_path):
     # dedup still exact after the rebuild: re-seeding adds nothing
     cr.seed(urls)
     assert len(cr.seen_urls()) == 3000
+
+
+def test_empty_add_leaves_the_filter_as_it_was(spark, url_sets, tmp_path):
+    """add() of an empty frame returns 0 and changes nothing: a filter
+    that had no table still has none, a filled one keeps its table, and
+    both still round-trip through to_df/from_df, including a parquet
+    read with the snapshot schema and a table from before the ``p``
+    column existed."""
+    empty = spark.createDataFrame([], "url string")
+    fresh = PartitionedBloom(partitions=4, capacity=1 << 10)
+    assert fresh.add(spark, empty) == 0
+    assert fresh._table is None and fresh.n_added == 0
+    restored = PartitionedBloom.from_df(fresh.to_df(spark))
+    assert (restored.P, restored.m, restored.k, restored.n_added) == \
+        (4, fresh.m, fresh.k, 0)
+
+    seen, _ = url_sets
+    bloom = PartitionedBloom(partitions=4, capacity=1 << 16)
+    bloom.add(spark, seen)
+    table = bloom._table
+    assert bloom.add(spark, empty) == 0
+    assert bloom._table is table and bloom.n_added == 20000
+
+    def rows(f):
+        return sorted((r["pid"], bytes(r["bitset"])) for r in
+                      f.to_df(spark).select("pid", "bitset").collect())
+
+    for name, df in (("current", bloom.to_df(spark)),
+                     ("legacy", bloom.to_df(spark).drop("p"))):
+        path = str(tmp_path / name)
+        df.write.parquet(path)
+        back = PartitionedBloom.from_df(
+            spark.read.schema(PartitionedBloom.SNAPSHOT_SCHEMA).parquet(path))
+        assert (back.P, back.m, back.k, back.n_added) == \
+            (bloom.P, bloom.m, bloom.k, bloom.n_added)
+        assert rows(back) == rows(bloom)

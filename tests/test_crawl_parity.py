@@ -397,3 +397,151 @@ def test_host_state_memo_evicts_without_changing_the_crawl(
                         OracleConfig(budget=4, order_mode=mode, **kw))
     ora.seed(list(seeds["url"]))
     assert_parity(cr, ora.crawl(max_rounds=100))
+
+
+def test_cycle_counters_equal_with_and_without_events(spark):
+    """Without per-URL events the cycle's counters come from Observations
+    on the jobs it already runs (pop, delta fold, Bloom merge); with
+    events the robots-denied and error counts come from the collected
+    outcome rows. Every counter of every cycle is the same either way
+    over the robots-matrix web, also with AQE and the Bloom filter on."""
+    seeds, web_pdf, _ = fixtures.make_web_fixture(n_hosts=6, pages_per_host=2)
+    web_df = spark.createDataFrame(web_pdf)
+
+    def counters(**kw):
+        cr = SparkCrawler(spark, web_df, tempfile.mkdtemp(),
+                          CrawlConfig(budget=16, order_mode="random", **kw))
+        cr.seed(list(seeds["url"]))
+        out = [(s.popped, s.links_found, s.links_new, s.dedup_hits,
+                s.robots_denied, s.errors) for s in cr.crawl(max_cycles=100)]
+        return out, cr.seen_urls()
+
+    with_events = counters(collect_events=True)
+    assert counters(collect_events=False) == with_events
+    try:
+        adaptive = counters(collect_events=False, adaptive_exec=True,
+                            use_bloom=True, bloom_partitions=4,
+                            bloom_capacity=1 << 12)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    assert adaptive == with_events
+    totals = [sum(c[i] for c in with_events[0]) for i in range(6)]
+    assert all(totals), totals  # every counter is exercised
+
+
+def _odd_link_web():
+    """The 2-host fixture web plus links Spark's ``parse_url`` rejects
+    under ANSI mode (a space, ``|``, ``{}``, a bad percent escape) and a
+    link with a port; two of them are pages of the web. Its status_code
+    column comes out int64 (a long in Spark), wider than the frontier's."""
+    import pandas as pd
+
+    seeds, web, _ = fixtures.make_web_fixture(n_hosts=2, pages_per_host=3)
+    odd = ["http://host0.example/x y", "/a|b", "/{t}", "/p%zz", "/x y.html",
+           "http://HOST1.example:8080/z"]
+    anchors = "".join(f'<a href="{h}">odd</a>' for h in odd).encode()
+    web = web.copy()
+    i = web.index[web["url"] == "http://host0.example/index.html"][0]
+    web.at[i, "body"] = web.at[i, "body"].replace(b"</body>",
+                                                  anchors + b"</body>")
+    extra = [
+        {"url": "http://host0.example/x y.html", "host": "host0.example",
+         "status_code": 200, "content_type": "text/html", "location": None,
+         "body": b'<html><body><a href="/{t}">t</a></body></html>',
+         "body_image_id": None},
+        {"url": "http://host0.example/a|b", "host": "host0.example",
+         "status_code": 404, "content_type": "text/html", "location": None,
+         "body": b"gone", "body_image_id": None},
+    ]
+    return seeds, pd.concat([web, pd.DataFrame(extra)], ignore_index=True)
+
+
+@pytest.mark.parametrize("robots_enabled", [True, False])
+def test_links_parse_url_rejects_crawl_like_the_oracle(spark, robots_enabled):
+    """Hosts of discovered links come from the handler kernel
+    (``urls.hostname_of``), not from Spark's ``parse_url``, which raises
+    INVALID_URL on these links under ANSI mode and killed the cycle."""
+    seeds, web_pdf = _odd_link_web()
+    cr, res = run_pair(spark, seeds, web_pdf, spark.createDataFrame(web_pdf),
+                       budget=4, mode="random",
+                       robots_enabled=robots_enabled)
+    assert_parity(cr, res)
+    seen = cr.seen_urls()
+    for u in ("http://host0.example/x y", "http://host0.example/a|b",
+              "http://host0.example/{t}", "http://host0.example/p%zz",
+              "http://host0.example/x y.html", "http://host1.example:8080/z"):
+        assert u in seen
+    hosts = dict(cr.frontier.select("url", "host").collect())
+    assert hosts["http://host1.example:8080/z"] == "host1.example"
+    assert hosts["http://host0.example/x y"] == "host0.example"
+
+
+def _host_state_part_rows(workdir):
+    """(version, table, part number) → rows, for every part file of the
+    retained host_delay and robots snapshot tables."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = {}
+    for path in glob.glob(os.path.join(workdir, "snapshots", "v*", "*",
+                                       "part-*.parquet")):
+        version, table = path.split(os.sep)[-3:-1]
+        if table in ("host_delay", "robots"):
+            part = os.path.basename(path).split("-")[1]
+            out[(version, table, part)] = pq.read_table(path).to_pylist()
+    return out
+
+
+def test_host_state_snapshots_are_written_in_key_order(spark):
+    """Two identical decay crawls, each killed and resumed, write the same
+    rows in the same order into every part file of the host_delay and
+    robots snapshot tables."""
+    seeds, web_pdf, _ = fixtures.make_web_fixture(n_hosts=4, pages_per_host=2)
+    web_df = spark.createDataFrame(web_pdf)
+
+    def crawl():
+        cfg = CrawlConfig(budget=4, order_mode="decay", virtual_start_ms=1e12,
+                          checkpoint_every=1)
+        wd = tempfile.mkdtemp()
+        first = SparkCrawler(spark, web_df, wd, cfg)
+        first.seed(list(seeds["url"]))
+        first.crawl(max_cycles=2)
+        resumed = SparkCrawler(spark, web_df, wd, cfg)
+        assert resumed.resume()
+        resumed.crawl(max_cycles=100)
+        return _host_state_part_rows(wd)
+
+    a, b = crawl(), crawl()
+    assert {t for _, t, _ in a} == {"host_delay", "robots"}
+    assert a == b
+    for rows in a.values():
+        keys = [next(iter(r.values())) for r in rows]
+        assert keys == sorted(keys)
+
+
+def test_web_pages_from_another_session(spark, small_web):
+    """A web table built in another session of the same application crawls
+    like the oracle. The cycle's counters are Observations, and an
+    Observation completes only through an action in the session of the
+    frame it observes, so the frames the cycle observes must not take
+    web_pages' session (the crawl would wait forever)."""
+    import threading
+
+    seeds, web_pdf, _ = small_web
+    web_df = spark.newSession().createDataFrame(web_pdf)
+    cr = SparkCrawler(spark, web_df, tempfile.mkdtemp(),
+                      CrawlConfig(budget=8, order_mode="random",
+                                  collect_events=False))
+    cr.seed(list(seeds["url"]))
+    done = []
+    t = threading.Thread(target=lambda: done.append(cr.crawl(max_cycles=100)),
+                         daemon=True)
+    t.start()
+    t.join(600)
+    assert done, "the crawl did not finish"
+    ora = OracleCrawler(web_pages_dict(web_pdf),
+                        OracleConfig(budget=8, order_mode="random"))
+    ora.seed(list(seeds["url"]))
+    assert_parity(cr, ora.crawl(max_rounds=100), check_order=False)

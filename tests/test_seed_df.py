@@ -194,3 +194,20 @@ def test_snapshot_time_travel(spark, tmp_path):
     assert old is not None
     n_old, n_live = old.count(), cr.frontier.count()
     assert n_old < n_live
+
+
+def test_seed_df_hosts_of_urls_parse_url_rejects(spark):
+    """seed_df takes each row's host from ``urls.hostname_of``, like the
+    list seed and the oracle; Spark's ``parse_url`` raises INVALID_URL on
+    these URLs under ANSI mode."""
+    from supercrawler_spark import urls
+
+    _, web, _ = fixtures.make_web_fixture(n_hosts=1, pages_per_host=3)
+    odd = ["http://host0.example/x y.html", "http://host0.example/a|b",
+           "http://host0.example/{t}", "http://Host1.example:8080/p%zz"]
+    cr = SparkCrawler(spark, spark.createDataFrame(web), tempfile.mkdtemp(),
+                      CrawlConfig(budget=4, order_mode="random"))
+    assert cr.seed_df(spark.createDataFrame([(u,) for u in odd], ["url"])) == 4
+    hosts = dict(cr.frontier.select("url", "host").collect())
+    assert hosts == {u: urls.hostname_of(u) for u in odd}
+    assert hosts["http://Host1.example:8080/p%zz"] == "host1.example"

@@ -82,3 +82,29 @@ def test_default_driver_memory_fits_the_host(monkeypatch):
         monkeypatch.setattr(os, "sysconf", lambda name, p=pages: {
             "SC_PAGE_SIZE": page, "SC_PHYS_PAGES": p}[name])
         assert _default_driver_memory() == want, ram_gib
+
+
+def test_pydaemon_pins_blas_threads_unless_set():
+    """Importing the daemon module in a fresh interpreter sets the BLAS
+    and OpenMP thread pools to one thread before numpy loads (importing
+    the package alone loads no numpy); a value already in the
+    environment is kept."""
+    import subprocess
+
+    names = ("OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS", "OMP_NUM_THREADS")
+    code = ("import os, sys\n"
+            "import supercrawler_spark\n"
+            "assert 'numpy' not in sys.modules\n"
+            "import supercrawler_spark.pydaemon\n"
+            "assert 'numpy' in sys.modules\n"
+            f"print(','.join(os.environ[v] for v in {names!r}))\n")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k not in names}
+
+    def run(extra):
+        return subprocess.run([sys.executable, "-c", code], cwd=repo,
+                              env={**env, **extra}, capture_output=True,
+                              text=True, check=True).stdout.strip()
+
+    assert run({}) == "1,1,1"
+    assert run({"OMP_NUM_THREADS": "3"}) == "1,1,3"
