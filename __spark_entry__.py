@@ -537,9 +537,8 @@ def q_ann_ivf_topk(spark, sf_dir):
     """IVF-flat ANN with the deterministic sampled-centroid quantizer
     (similarity.det_ivf_ann_topk): centroids = embeddings of vec_id 0..15,
     integer-quantized L2 assignment, n_probe nearest centroids probed per
-    query, exact cosine re-rank — fully oracle-replayable (the MLlib
-    k-means variant ivf_ann_topk remains the trained-quantizer path,
-    recall-gated in pytest)."""
+    query, exact cosine re-rank — fully oracle-replayable, and recall-gated
+    against brute force in pytest."""
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec(F.col("embedding")).alias("embedding"))
     queries = emb.filter(F.col("vec_id") < 20)

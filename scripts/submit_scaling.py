@@ -68,15 +68,17 @@ def main():
         kernel = _make_handler_kernel(default_registry())
         links = (kernel_in.mapInPandas(kernel, schema=_KERNEL_OUT_SCHEMA)
                  .filter(F.col("link").isNotNull())
-                 .select(F.col("link").alias("url"), "batch_idx", "link_idx"))
+                 .select(F.col("link").alias("url"), "batch_idx", "link_idx",
+                         "host"))
         w_dup = Window.partitionBy("url").orderBy("batch_idx", "link_idx")
         unique = (links.withColumn("_rn", F.row_number().over(w_dup))
                   .filter(F.col("_rn") == 1).drop("_rn"))
         new = unique.join(seen, "url", "left_anti")
-        ranked = new.withColumn(
-            "host", F.lower(F.parse_url(F.col("url"), F.lit("HOST"))))
+        # host comes from the kernel (urls.hostname_of, the oracle's own
+        # host function); parse_url raises INVALID_URL under ANSI mode on
+        # links such as "/x y.html"
         w = Window.partitionBy("host").orderBy("batch_idx", "link_idx")
-        popped = (ranked.withColumn("rank", F.row_number().over(w))
+        popped = (new.withColumn("rank", F.row_number().over(w))
                   .filter(F.col("rank") <= 64))
         n = popped.count()
         return time.time() - t0, n

@@ -180,7 +180,7 @@ class PartitionedBloom:
         prefilter silently degrades to the exact path (every candidate
         flags maybe-seen); the crawl loop watches this estimate and
         rebuilds at 2x partitions/bits when it crosses
-        CrawlConfig.bloom_rebuild_fpr."""
+        crawler.BLOOM_REBUILD_FPR."""
         if self.n_added <= 0:
             return 0.0
         n_p = self.n_added / self.P

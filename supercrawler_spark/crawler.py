@@ -84,6 +84,14 @@ HOST_MEMO_SIZE = 10000
 # × 50k links ⇒ ~10^6 rows).
 SEQ_PARTITION_THRESHOLD = 65536
 
+# Bloom capacity planning for 10^10-key frontiers: after every add the
+# engine checks the analytic fp_rate_estimate; above this the filter stops
+# filtering (every candidate routes to the exact verify), so it is rebuilt
+# EMPTY at 2x partitions + 2x bits/partition and repopulated from the
+# frontier (one distributed add), repeating until the estimate clears it.
+# The estimate is logged in the metrics table (bloom_fpr_est column).
+BLOOM_REBUILD_FPR = 0.05
+
 FRONTIER_SCHEMA = T.StructType([
     T.StructField("url_hash", T.LongType()),
     T.StructField("url", T.StringType()),
@@ -364,15 +372,6 @@ class CrawlConfig:
     use_bloom: bool = False              # Bloom-prefiltered dedup (scale path)
     bloom_partitions: int = 32
     bloom_capacity: int = 1 << 20
-    bloom_rebuild_fpr: float | None = 0.05
-    # capacity planning for 10^10-key frontiers: after every bloom add the
-    # engine checks the analytic fp_rate_estimate; above this threshold the
-    # filter silently stops filtering (every candidate routes to the exact
-    # verify), so it is rebuilt EMPTY at 2x partitions + 2x bits/partition
-    # and repopulated from the frontier (one distributed add), repeating
-    # until the estimate clears the threshold. The rebuild is logged in the
-    # metrics table (bloom_fpr_est column). None disables.
-    max_redirect_hops: int = 10          # robots fetch follows redirects
     fetch_mode: str = "join"
     # "join": offline/fixture fetch — the batch broadcast-joins INTO the
     #   web_pages table (tests, replays, warehouse-resident crawls);
@@ -409,7 +408,8 @@ class CycleStats:
     robots_denied: int = 0
     errors: int = 0
     events: list = field(default_factory=list)
-    results: list = field(default_factory=list)  # per-row outcomes (driver)
+    results: list = field(default_factory=list)  # per-row outcomes (driver),
+    # in batch_idx (pick) order
     page_links: dict = field(default_factory=dict)  # batch_idx → [links]
     # (only populated when config.collect_links — the facade `links` event)
 
@@ -585,8 +585,7 @@ class SparkCrawler:
         if self.config.order_mode == "fifo":
             nft = F.lit(0.0)
         else:
-            nft = (F.lit(self.cycle_time)
-                   - SF.deterministic_priority(F.col("url")) * F.lit(YEAR_MS))
+            nft = SF.fresh_next_fetch(F.col("url"), F.lit(self.cycle_time))
         rows = _unfetched(seqd.withColumn("next_fetch_time", nft)
                           .withColumn("host", SF.hostname_udf(F.col("url"))))
         # stage lazily and commit straight to the parquet base — a web-scale
@@ -729,15 +728,6 @@ class SparkCrawler:
             stats.events.append(("urllistcomplete", None))
             return stats
 
-        if cfg.collect_events:
-            # per-URL crawl order (parity contract / facade events) — the
-            # only place the popped batch reaches the driver, and only on
-            # request
-            for r in frame.select("batch_idx", "url") \
-                          .orderBy("batch_idx").collect():
-                self.crawl_order.append(
-                    (self.cycle_id, int(r["batch_idx"]), r["url"]))
-
         # --- robots refresh + routing (driver-coordinated small dimension) --
         # driver sees one row per distinct robots key (≈ host) in the batch,
         # never the per-URL rows: the robots fetch itself is inherently
@@ -807,7 +797,7 @@ class SparkCrawler:
                 # truncates lineage, so the post-pin plan is an opaque
                 # InMemoryTableScan that hides the MapInPandas fetch stage
                 self.plan_sink["fetch_join"] = plan_str(found_expr)
-            found = found_expr.localCheckpoint(eager=True).persist()
+            found = found_expr.localCheckpoint(eager=True)
         else:
             # offline fetch join: the batch (politeness-budget bounded) is
             # broadcast INTO the web table: one streaming scan of web_pages
@@ -904,9 +894,9 @@ class SparkCrawler:
         # results is batch-sized and stays EXECUTOR-RESIDENT: the upsert
         # delta, the crawl_log rows and the cycle metrics all derive from
         # it as DataFrame lineage; its two counters are observed by the
-        # delta fold's job, which always reads it. Full rows cross to the
-        # driver ONLY when collect_events asks for the facade's per-URL
-        # event payloads.
+        # first job that materializes it (the events collect, else the
+        # delta fold). Full rows cross to the driver ONLY when
+        # collect_events asks for the facade's per-URL event payloads.
         outcome_counts = Observation()
         results = (results
                    .select("batch_idx", "url", "num_errors", "status_out",
@@ -918,7 +908,13 @@ class SparkCrawler:
                             F.count(F.col("error_code")).alias("errors"))
                    .persist())
         if cfg.collect_events:
-            stats.results = [r.asDict() for r in results.collect()]
+            # the only place per-URL rows reach the driver, and only on
+            # request: one row per popped URL, in pick order — the facade's
+            # event payloads and the crawl order (parity contract)
+            stats.results = sorted((r.asDict() for r in results.collect()),
+                                   key=lambda r: r["batch_idx"])
+            self.crawl_order.extend((self.cycle_id, r["batch_idx"], r["url"])
+                                    for r in stats.results)
 
         # --- ordered insert list: robots enqueues then discovered links -----
         # (robots URL enqueued BEFORE the page's own links — Crawler.js:463-465)
@@ -998,8 +994,7 @@ class SparkCrawler:
             else:
                 base = base.withColumn(
                     "next_fetch_time",
-                    F.col("t_insert")
-                    - SF.deterministic_priority(F.col("url")) * F.lit(YEAR_MS))
+                    SF.fresh_next_fetch(F.col("url"), F.col("t_insert")))
             # count and max seq are observed by the delta fold's job,
             # which materializes these rows
             inserted = Observation()
@@ -1037,12 +1032,12 @@ class SparkCrawler:
                                .when(has_upd, F.lit(0))
                                .otherwise(F.col("num_errors")))
             new_nft = (
-                F.when(is_err, t_row + F.lit(cfg.initial_retry_ms)
-                       * F.pow(F.lit(2.0), new_num_errors.cast("double") - F.lit(1.0)))
+                F.when(is_err, SF.backoff_next_fetch(t_row, new_num_errors,
+                                                     cfg.initial_retry_ms))
                  .when(has_upd & F.col("status_out").isNotNull(),
                        t_row + F.lit(cfg.recrawl_ms))
                  .when(has_upd,  # null status + null error → re-crawl now
-                       t_row - SF.deterministic_priority(F.col("url")) * F.lit(YEAR_MS))
+                       SF.fresh_next_fetch(F.col("url"), t_row))
                  .otherwise(F.col("next_fetch_time")))
         # one SELECT computing every output column from the ORIGINAL inputs
         # (chained withColumn would make new_nft see the already-updated
@@ -1125,17 +1120,16 @@ class SparkCrawler:
 
     def _maybe_rebuild_bloom(self) -> None:
         """Capacity planning (run after every bloom add): when the analytic
-        FPR estimate crosses config.bloom_rebuild_fpr the filter has
+        FPR estimate crosses BLOOM_REBUILD_FPR the filter has
         saturated — rebuild at 2× partitions/bits from the frontier (the
         authoritative seen set), doubling until the estimate clears the
         threshold (bounded at 8 doublings). Dedup results are unchanged
         either way (the Bloom is only ever a prefilter over an exact
         verify); saturation costs throughput, not correctness."""
-        cfg = self.config
-        if self._bloom is None or cfg.bloom_rebuild_fpr is None:
+        if self._bloom is None:
             return
         for _ in range(8):
-            if self._bloom.fp_rate_estimate() <= cfg.bloom_rebuild_fpr:
+            if self._bloom.fp_rate_estimate() <= BLOOM_REBUILD_FPR:
                 return
             grown = self._bloom.grown_empty(2)
             grown.add(self.spark, self.frontier.select("url"))
@@ -1326,7 +1320,7 @@ class SparkCrawler:
 
     def _fetch_with_redirects(self, urls: list[str]) -> dict:
         """Resolve each URL to a final (status, body) or None (request
-        error), following 3xx up to max_redirect_hops (robots fetch uses
+        error), following 3xx up to MAX_REDIRECT_HOPS (robots fetch uses
         followRedirect=true — Crawler.js:380-412, 445-502). Small
         driver-side dimension fetch: robots URLs are one per unique batch
         host — batch-bounded, exactly as the reference fetches them. Each
@@ -1345,7 +1339,7 @@ class SparkCrawler:
         result: dict[str, tuple[int, bytes] | None] = {}
         pending = {u: u for u in urls}  # original → current
         try:
-            for _ in range(cfg.max_redirect_hops):
+            for _ in range(urls_mod.MAX_REDIRECT_HOPS):
                 if not pending:
                     break
                 got = hop(list(dict.fromkeys(pending.values())))
@@ -1405,7 +1399,7 @@ class SparkCrawler:
         and per-cycle metrics as driver scalars; both flushed as parquet at
         each snapshot commit so checkpoint/resume carries the lineage.
         ``outcome_counts`` holds the robots-denied and error counts,
-        observed on ``results`` by the delta fold's job."""
+        observed on ``results`` by the job that materialized it."""
         self._log_df_buffer.append(results.select(
             F.lit(self.cycle_id).cast("long").alias("cycle_id"),
             F.col("batch_idx"),
@@ -1415,18 +1409,9 @@ class SparkCrawler:
             F.col("error_code"),
             F.col("error_message").alias("detail")))
         self._pending_results.append(results)
-        if stats.results:
-            # per-URL payloads were already collected for the facade events
-            # — derive the scalars from them rather than running another job
-            stats.robots_denied = sum(
-                1 for r in stats.results
-                if r["error_code"] == "ROBOTS_NOT_ALLOWED")
-            stats.errors = sum(
-                1 for r in stats.results if r["error_code"] is not None)
-        else:
-            counts = outcome_counts.get
-            stats.robots_denied = int(counts["robots_denied"])
-            stats.errors = int(counts["errors"])
+        counts = outcome_counts.get
+        stats.robots_denied = int(counts["robots_denied"])
+        stats.errors = int(counts["errors"])
         self._metrics_buffer.append({
             "cycle_id": self.cycle_id,
             "popped": stats.popped,

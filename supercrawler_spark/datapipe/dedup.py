@@ -262,17 +262,22 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
                               id_col, SIMHASH_BITS, max_hamming)
 
 
+# signature tables at least this large band on chunk PAIRS (see
+# hamming_near_pairs); smaller ones on single chunks
+PAIRS_BANDING_MIN_ROWS = 50_000
+
+
 def hamming_near_pairs(df: DataFrame, sig_col: str, id_col: str,
                        bits: int, max_hamming: int,
-                       out_a: str = "id_a", out_b: str = "id_b",
-                       scheme: str = "auto") -> DataFrame:
+                       out_a: str = "id_a", out_b: str = "id_b") -> DataFrame:
     """Generic banded hamming-distance near-pair join over ANY integer
     signature column (``bits`` wide, stored in a signed 64-bit column):
-    pigeonhole-complete banding (see scheme comment below: double-chunk
-    bands at ``max_hamming + 2`` chunks when possible, classic
-    single-chunk bands otherwise), so candidates are bucket collisions
-    only (never O(n²)); a codegen'd bit_count verify runs BEFORE the
-    distinct so the dedup exchange is O(result).
+    pigeonhole-complete banding (see the scheme comment below: double-chunk
+    bands at ``max_hamming + 2`` chunks on tables of at least
+    PAIRS_BANDING_MIN_ROWS rows, classic single-chunk bands otherwise), so
+    candidates are bucket collisions only (never O(n²)); a codegen'd
+    bit_count verify runs BEFORE the distinct so the dedup exchange is
+    O(result).
 
     This is the shared kernel for 60-bit text SimHash and 64-bit image
     perceptual hashes (multimodal.phash_dup_pairs): near-duplicate IMAGE
@@ -299,25 +304,16 @@ def hamming_near_pairs(df: DataFrame, sig_col: str, id_col: str,
     # C(k,2)/k more exploded rows. At h=8/60 bits: 45 bands of ~12-bit
     # keys vs 9 bands of ~7-bit keys → ~6x fewer candidate pairs streamed
     # through the verify, the dominant corpus-scale cost.
-    # scheme choice is a corpus-size tradeoff: 'pairs' explodes
+    # the choice is a corpus-size tradeoff: 'pairs' explodes
     # C(h+2,2)/(h+1) more rows but its double-wide bucket keys collide
     # ~2^-w less often — collisions scale ~n^2/2^w while the explode
     # scales ~n, so 'pairs' wins on large corpora and loses on small ones
     # (measured: 2x slower at n=5k, where verify is cheap and the 45-band
-    # explode dominates). 'auto' counts the (already-checkpointed)
-    # signature table — one cached count — and switches at 50k rows;
-    # 'single' is the classic h+1 banding, 'pairs' forces double-chunk.
-    if scheme not in ("auto", "single", "pairs"):
-        raise ValueError(f"unknown banding scheme {scheme!r}")
+    # explode dominates). The (already-checkpointed) signature table is
+    # counted — one cached count — and the switch is at
+    # PAIRS_BANDING_MIN_ROWS.
     pairs_possible = (max_hamming + 2) <= bits and max_hamming >= 1
-    if scheme == "pairs" and not pairs_possible:
-        raise ValueError("pairs banding needs max_hamming >= 1 and "
-                         "max_hamming + 2 <= bits")
-    if scheme == "auto":
-        use_pairs = pairs_possible and sig.count() >= 50_000
-    else:
-        use_pairs = pairs_possible and scheme == "pairs"
-    if use_pairs:
+    if pairs_possible and sig.count() >= PAIRS_BANDING_MIN_ROWS:
         k = max_hamming + 2
         defs = _chunk_defs(bits, k)
         chunk_cols = [chunk_val(off, w).alias(f"_c{c}")

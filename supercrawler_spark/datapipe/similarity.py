@@ -8,6 +8,8 @@
   to bucket collisions (hamming-adjacent buckets optional) — the scale path:
   at 10^10 rows the cross product is impossible; bucket joins shuffle only
   collisions.
+- IVF-flat ANN: a deterministic sampled-centroid coarse quantizer, probed
+  buckets re-ranked by exact cosine, with an ANSI-SQL oracle twin.
 - embedding near-dup pairs: cosine >= threshold over bucketed candidates.
 """
 
@@ -33,6 +35,19 @@ def cosine(a, b) -> "F.Column":
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _rank_topk(cand: DataFrame, k: int, round_to: int) -> DataFrame:
+    """Top-k neighbors per query from candidate (q_id, q_vec, n_id, n_vec)
+    rows: cosine rounded to ``round_to`` places, ranked by (cos desc,
+    n_id) — the tail every top-k search shares with its SQL twin's
+    ``row_number() ... WHERE rank <= k``."""
+    scored = cand.withColumn(
+        "cos", F.round(cosine(F.col("q_vec"), F.col("n_vec")), round_to))
+    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+                  .filter(F.col("rank") <= k)
+                  .select("q_id", "n_id", "cos", "rank"))
+
+
 def brute_force_topk(df: DataFrame, queries: DataFrame, k: int = 5,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      round_to: int = 4) -> DataFrame:
@@ -41,15 +56,9 @@ def brute_force_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     query partition."""
     q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
     c = df.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"))
-    scored = (F.broadcast(q).crossJoin(c)
-              .filter(F.col("q_id") != F.col("n_id"))
-              .withColumn("cos",
-                          F.round(cosine(F.col("q_vec"), F.col("n_vec")),
-                                  round_to)))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("q_id", "n_id", "cos", "rank"))
+    cand = (F.broadcast(q).crossJoin(c)
+            .filter(F.col("q_id") != F.col("n_id")))
+    return _rank_topk(cand, k, round_to)
 
 
 def cosine_dup_pairs(df: DataFrame, threshold: float = 0.99,
@@ -112,56 +121,8 @@ def cosine_dup_pairs(df: DataFrame, threshold: float = 0.99,
 
 
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN — k-means coarse quantizer + probed buckets
+# IVF (inverted-file) ANN — deterministic sampled-centroid quantizer
 # ---------------------------------------------------------------------------
-
-def ivf_ann_topk(df: DataFrame, queries: DataFrame, k: int = 5,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 n_centroids: int = 16, n_probe: int = 4, seed: int = 7,
-                 round_to: int = 4) -> DataFrame:
-    """IVF-flat approximate top-k: a k-means coarse quantizer (Spark MLlib,
-    trained once) assigns every vector to its nearest-centroid bucket;
-    each query probes only its ``n_probe`` nearest centroids and exact
-    cosine re-ranks those buckets. At 10^10 rows the probed fraction is
-    n_probe/n_centroids of the corpus per query, shuffled by bucket id —
-    never an all-pairs join. Recall vs brute force is pinned in
-    tests/test_datapipe.py.
-    """
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = df.select(array_to_vector(F.col(vec_col)).alias("features"))
-    model = KMeans(k=n_centroids, seed=seed, maxIter=20).fit(train)
-    centers = np.vstack(model.clusterCenters())          # (C, dim) — tiny
-
-    def make_bucket_udf(top_n: int):
-        @F.pandas_udf(T.ArrayType(T.IntegerType()))
-        def buckets(vecs: pd.Series) -> pd.Series:
-            mat = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-            # nearest centroids by euclidean distance (k-means geometry)
-            d2 = ((mat[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-            idx = np.argsort(d2, axis=1)[:, :top_n]
-            return pd.Series([row.astype("int32").tolist() for row in idx])
-        return buckets
-
-    assign1 = make_bucket_udf(1)
-    assignp = make_bucket_udf(n_probe)
-    c = df.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
-                  F.explode(assign1(F.col(vec_col))).alias("bucket"))
-    q = queries.select(F.col(id_col).alias("q_id"),
-                       F.col(vec_col).alias("q_vec"),
-                       F.explode(assignp(F.col(vec_col))).alias("bucket"))
-    cand = (q.join(c, "bucket")
-             .filter(F.col("q_id") != F.col("n_id"))
-             .select("q_id", "q_vec", "n_id", "n_vec"))
-    scored = cand.withColumn(
-        "cos", F.round(cosine(F.col("q_vec"), F.col("n_vec")), round_to))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("q_id", "n_id", "cos", "rank"))
-
 
 def _det_centroids(df: DataFrame, centroid_ids: tuple, id_col: str,
                    vec_col: str, quant_scale: float) -> np.ndarray:
@@ -198,11 +159,11 @@ def det_ivf_ann_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     init, skipping Lloyd iterations), quantized to integers
     (floor(|x|*scale+0.5), ties-away-from-zero — identical to SQL round),
     so bucket assignment is EXACT integer L2 arithmetic that an ANSI-SQL
-    oracle replays bit-for-bit (det_ivf_oracle_sql). Same probe shape as
-    ivf_ann_topk: corpus rows assign to their nearest centroid, queries
-    probe their ``n_probe`` nearest, exact cosine re-ranks the probed
-    buckets — the probed fraction is n_probe/len(centroid_ids) of the
-    corpus, never an all-pairs join. Ties in the assignment distance break
+    oracle replays bit-for-bit (det_ivf_oracle_sql). IVF-flat probe shape:
+    corpus rows assign to their nearest centroid, queries probe their
+    ``n_probe`` nearest, exact cosine re-ranks the probed buckets — the
+    probed fraction is n_probe/len(centroid_ids) of the corpus, never an
+    all-pairs join. Ties in the assignment distance break
     by centroid index (stable argsort == SQL ORDER BY d2, cid)."""
     centers = _det_centroids(df, centroid_ids, id_col, vec_col, quant_scale)
     assign1 = _det_bucket_udf(centers, 1, quant_scale)
@@ -215,12 +176,7 @@ def det_ivf_ann_topk(df: DataFrame, queries: DataFrame, k: int = 5,
     cand = (q.join(c, "bucket")
              .filter(F.col("q_id") != F.col("n_id"))
              .select("q_id", "q_vec", "n_id", "n_vec"))
-    scored = cand.withColumn(
-        "cos", F.round(cosine(F.col("q_vec"), F.col("n_vec")), round_to))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("q_id", "n_id", "cos", "rank"))
+    return _rank_topk(cand, k, round_to)
 
 
 def det_ivf_oracle_sql(centroid_ids: tuple = tuple(range(16)),
@@ -395,12 +351,7 @@ def det_lsh_ann_topk(df: DataFrame, queries: DataFrame, k: int = 5,
                         F.col(vec_col).alias("q_vec"))
     nv = df.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"))
     cand = nv.join(F.broadcast(cand_ids.join(F.broadcast(qv), "q_id")), "n_id")
-    scored = cand.withColumn(
-        "cos", F.round(cosine(F.col("q_vec"), F.col("n_vec")), round_to))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("q_id", "n_id", "cos", "rank"))
+    return _rank_topk(cand, k, round_to)
 
 
 def det_lsh_oracle_sql(dim: int = 64, n_planes: int = 4, n_tables: int = 8,
@@ -506,12 +457,7 @@ def lsh_ann_topk(df: DataFrame, queries: DataFrame, k: int = 5,
                         F.col(vec_col).alias("q_vec"))
     nv = df.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"))
     cand = nv.join(F.broadcast(cand_ids.join(F.broadcast(qv), "q_id")), "n_id")
-    scored = cand.withColumn(
-        "cos", F.round(cosine(F.col("q_vec"), F.col("n_vec")), round_to))
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k)
-                  .select("q_id", "n_id", "cos", "rank"))
+    return _rank_topk(cand, k, round_to)
 
 
 # ---------------------------------------------------------------------------

@@ -285,7 +285,8 @@ class Crawler:
                 # (Crawler.js:316); the deterministic serialization of a
                 # batch-atomic cycle is the full crawlurl→…→crawledurl
                 # event group per URL, not batch-grouped phases
-                for r in sorted(stats.results, key=lambda r: r["batch_idx"]):
+                # (stats.results arrives in that order)
+                for r in stats.results:
                     self._emit("crawlurl", r["url"])
                     # processing events mirror _processUrl
                     # (Crawler.js:216-320): redirect/handlersError/httpError

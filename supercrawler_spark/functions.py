@@ -2,7 +2,7 @@
 
 Policy (per the Spark-first design): anything expressible as a builtin
 ``pyspark.sql.functions`` expression stays JVM-side inside whole-stage
-codegen (hashing, priorities, backoff arithmetic, content-type stripping);
+codegen (hashing, priorities, backoff arithmetic);
 only genuinely Python semantics (Node-parity URL resolution, robots.txt
 evaluation) run as Arrow-batched pandas UDFs — never per-row Python UDFs.
 """
@@ -50,21 +50,16 @@ def deterministic_priority(col) -> Column:
             / F.lit(float(2**32)))
 
 
-def fresh_next_fetch(url_col, now_ms) -> Column:
+def fresh_next_fetch(url_col, now_col) -> Column:
     """next_fetch_time for a fresh insert: now − priority·YEAR
     (randomized-but-deterministic drain order, DbUrlList.js:176-183)."""
-    return F.lit(float(now_ms)) - deterministic_priority(url_col) * F.lit(YEAR_MS)
+    return now_col - deterministic_priority(url_col) * F.lit(YEAR_MS)
 
 
 def backoff_next_fetch(now_ms_col, num_errors_col, initial_retry_ms: float) -> Column:
     """now + initialRetry · 2^(numErrors−1) — DbUrlList.js:172-188."""
     return now_ms_col + F.lit(initial_retry_ms) * F.pow(
         F.lit(2.0), num_errors_col.cast("double") - F.lit(1.0))
-
-
-def strip_content_type_params(col) -> Column:
-    """contentType.replace(/;.*$/g, '') — Crawler.js:333."""
-    return F.regexp_replace(col, ";.*$", "")
 
 
 def truncate_error(col, n: int = 1000) -> Column:
@@ -87,11 +82,6 @@ def robots_url_udf(urls: pd.Series) -> pd.Series:
 
 
 @F.pandas_udf(T.StringType())
-def path_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: urls_mod.path_of(u) if u else None)
-
-
-@F.pandas_udf(T.StringType())
 def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: urls_mod.canonicalize(u) if u else None)
 
@@ -101,13 +91,6 @@ def resolve_udf(base: pd.Series, href: pd.Series) -> pd.Series:
     return pd.Series(
         [urls_mod.resolve(b, h) if (b is not None and h is not None) else None
          for b, h in zip(base, href)]
-    )
-
-
-@F.pandas_udf(T.StringType())
-def normalize_content_type_udf(content_type: pd.Series, url: pd.Series) -> pd.Series:
-    return pd.Series(
-        [urls_mod.normalize_content_type(ct, u) for ct, u in zip(content_type, url)]
     )
 
 

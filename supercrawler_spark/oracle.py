@@ -58,7 +58,6 @@ class OracleConfig:
                        "+https://github.com/brendonboshell/supercrawler)")
     initial_retry_ms: float = HOUR_MS
     recrawl_ms: float = YEAR_MS
-    max_redirect_hops: int = 10
     max_idle_skip_ms: float | None = None  # idle fast-forward horizon
     host_salt_buckets: int = 1  # engine-only physical knob; semantics no-op
     delay_half_life_ms: float = 3600000.0  # decay mode (RedisUrlList.js:6,21)
@@ -142,7 +141,7 @@ class OracleCrawler:
     # -- robots ------------------------------------------------------------
     def _fetch_follow(self, url: str):
         cur = url
-        for _ in range(self.cfg.max_redirect_hops):
+        for _ in range(urls_mod.MAX_REDIRECT_HOPS):
             page = self.web.get(cur)
             if page is None:
                 return None

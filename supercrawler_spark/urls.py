@@ -24,6 +24,10 @@ import posixpath
 from urllib.parse import urljoin, urlsplit
 
 YEAR_MS = 31536000000  # 365 days, /root/reference/lib/DbUrlList.js:7
+# redirects a robots fetch follows before it counts as a request error: the
+# request library's maxRedirects default (robots use followRedirect=true —
+# /root/reference/lib/Crawler.js:380-412)
+MAX_REDIRECT_HOPS = 10
 
 
 def resolve(base: str, href: str) -> str:
@@ -108,12 +112,6 @@ def robots_url(url: str) -> str:
     """Robots URL per (protocol, host, port) — Crawler.js:511-526."""
     p = parse(url)
     return f"{p.scheme}://{p.host}/robots.txt"
-
-
-def host_key(url: str) -> str:
-    """``scheme://host[:port]`` — the robots-cache key domain."""
-    p = parse(url)
-    return f"{p.scheme}://{p.host}"
 
 
 def path_of(url: str) -> str:

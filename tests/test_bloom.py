@@ -331,8 +331,7 @@ def test_engine_rebuilds_saturated_bloom(spark, tmp_path):
         "url string, status_code int, content_type string, "
         "location string, body binary")
     cfg = CrawlConfig(budget=4, use_bloom=True, bloom_partitions=2,
-                      bloom_capacity=64, bloom_rebuild_fpr=0.05,
-                      robots_enabled=False)
+                      bloom_capacity=64, robots_enabled=False)
     cr = SparkCrawler(spark, web_df, str(tmp_path / "wd"), cfg)
     urls = [f"http://h{i % 7}.example/p{i}" for i in range(3000)]
     cr.seed(urls)

@@ -194,22 +194,6 @@ def test_cosine_dup_pairs_lsh_recall(planted_vecs):
     assert len(lsh) / max(len(exact), 1) >= 0.9, (len(lsh), len(exact))
 
 
-def test_ivf_ann_recall_vs_brute_force(spark, sf_dir):
-    emb = (spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-           .select("vec_id", F.transform("embedding",
-                                         lambda x: x.cast("double")).alias("embedding")))
-    queries = emb.filter(F.col("vec_id") < 16)
-    exact = SIM.brute_force_topk(emb, queries, k=5).collect()
-    approx = SIM.ivf_ann_topk(emb, queries, k=5,
-                              n_centroids=8, n_probe=3).collect()
-    exact_set = {(r["q_id"], r["n_id"]) for r in exact}
-    approx_set = {(r["q_id"], r["n_id"]) for r in approx}
-    recall = len(exact_set & approx_set) / len(exact_set)
-    assert recall >= 0.5, f"IVF recall {recall}"
-    # probed fraction bounds the work: every query visits <= n_probe buckets
-    assert all(r["rank"] <= 5 for r in approx)
-
-
 def test_bpe_token_count_and_rolling_fingerprint(docs):
     out = {r["doc_id"]: (r["n"], r["rh"]) for r in docs.select(
         "doc_id", TX.bpe_token_count(F.col("text")).alias("n"),

@@ -47,7 +47,8 @@ def test_queries_all_have_callables(entrymod):
     "flagship_frontier_pop", "q1_pricing_summary", "dedup_exact_fp",
     "token_counts", "record_scalars", "minhash_signatures",
     "ngram_span_dedup", "corpus_resample", "retry_schedules",
-    "sitemap_extracts", "semantic_dedup",
+    "sitemap_extracts", "semantic_dedup", "embedding_cosine_topk",
+    "embedding_dup_pairs", "ann_lsh_topk", "ann_ivf_topk",
 ])
 def test_query_matches_oracle(spark, entrymod, duck, sf_dir, name):
     spdf = entrymod.queries()[name](spark, sf_dir).toPandas()

@@ -59,13 +59,19 @@ def test_phash_properties():
     other = imaging.phash64(imaging.synth_pixels("img-9999", 40, 40))
     assert imaging.hamming64(h1, other) > 10
 
-def test_hamming_near_pairs_generic_64bit_completeness(spark):
+@pytest.mark.parametrize("banding", ["single_chunk", "chunk_pairs"])
+def test_hamming_near_pairs_generic_64bit_completeness(spark, monkeypatch,
+                                                       banding):
     """The generic banded hamming kernel at bits=64 (the phash width):
     banded result == brute force, including planted near pairs and signed
-    int64 signatures (top bit set)."""
+    int64 signatures (top bit set), with single-chunk bands and with the
+    chunk-pair bands large tables switch to."""
     import numpy as np
 
     from supercrawler_spark.datapipe import dedup as DD
+
+    if banding == "chunk_pairs":
+        monkeypatch.setattr(DD, "PAIRS_BANDING_MIN_ROWS", 0)
 
     rng = np.random.default_rng(5)
     sigs = list(rng.integers(-2**63, 2**63 - 1, size=40, dtype=np.int64))

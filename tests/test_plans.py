@@ -183,18 +183,17 @@ def test_http_cycle_dedup_and_merge_shapes_unchanged(http_cycle_plans):
     assert "CartesianProduct" not in http_cycle_plans["merge"]
 
 
-@pytest.fixture(scope="module")
-def steady_cycles(spark):
-    """A robots-on, Bloom-on crawl without per-URL events, each cycle run
-    in its own job group; returns [(jobs, generated classes compiled)]
-    per cycle for four non-commit cycles."""
+def _steady_cycles(spark, collect_events):
+    """A robots-on, Bloom-on crawl, each cycle run in its own job group;
+    returns [(jobs, generated classes compiled)] per cycle for four
+    non-commit cycles."""
     sc = spark.sparkContext
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     seeds, web, _ = fixtures.make_web_fixture(n_hosts=2, pages_per_host=3)
     cr = SparkCrawler(spark, spark.createDataFrame(web), tempfile.mkdtemp(),
                       CrawlConfig(budget=6, use_bloom=True, bloom_partitions=4,
                                   bloom_capacity=1 << 12,
-                                  collect_events=False))
+                                  collect_events=collect_events))
     cr.seed(sorted(set(seeds["url"])))
     out = []
     for i in range(4):
@@ -212,6 +211,18 @@ def steady_cycles(spark):
     return out
 
 
+@pytest.fixture(scope="module")
+def steady_cycles(spark):
+    """The steady crawl without per-URL events."""
+    return _steady_cycles(spark, collect_events=False)
+
+
+@pytest.fixture(scope="module")
+def steady_event_cycles(spark):
+    """The steady crawl with per-URL events collected to the driver."""
+    return _steady_cycles(spark, collect_events=True)
+
+
 def test_steady_cycle_runs_at_most_15_jobs(steady_cycles):
     """Counters ride on jobs the cycle already runs (Observations on the
     pop, the delta fold and the Bloom merge) and the robots keys sort on
@@ -226,3 +237,12 @@ def test_steady_cycle_reuses_generated_code(steady_cycles):
     entries recompiles ~140 classes every cycle)."""
     compiled = steady_cycles[3][1]
     assert compiled < 40, steady_cycles
+
+
+def test_steady_event_cycle_runs_at_most_15_jobs(steady_event_cycles):
+    """With per-URL events on, the outcome rows are the cycle's one per-URL
+    collect: the crawl order is read from them, and the robots-denied and
+    error counts stay Observations, so events add one job to the
+    events-off cycle."""
+    jobs = steady_event_cycles[1][0]
+    assert jobs <= 15, steady_event_cycles
