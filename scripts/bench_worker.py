@@ -25,7 +25,11 @@ BENCH_DIR = os.environ.get("SC_BENCH_DIR", "/tmp/sc_bench")
 def bench_dedup(master: str) -> dict:
     """Seen-set dedup micro-bench (BASELINE.md secondary metric): exact
     anti-join vs Bloom-prefiltered dedup at 2M seen x 1M candidates
-    (50% overlap). Asserts identical results."""
+    (50% overlap). Asserts identical results, and that absorbing the
+    prefilter's keys leaves the bits a fresh add of seen ∪ candidates
+    builds (compared executor-side, partition by partition)."""
+    from pyspark.sql import functions as F
+
     from supercrawler_spark.bloom import PartitionedBloom
     from supercrawler_spark.fixtures import make_seed_frontier
     from supercrawler_spark.session import get_spark
@@ -50,10 +54,24 @@ def bench_dedup(master: str) -> dict:
     n_bloom = bloom.prefilter(spark, cand, "url", seen).count()
     t_bloom = time.time() - t0
     assert n_bloom == n_exact, (n_bloom, n_exact)
+    # the crawl cycle's path: the probe already ORed the candidates' bits,
+    # absorb pins them; the result must be a fresh build of seen ∪ cand
+    t0 = time.time()
+    bloom.absorb(n_bloom)
+    t_absorb = time.time() - t0
+    ref = PartitionedBloom(partitions=32, capacity=2_000_000)
+    ref.add(spark, seen.unionByName(cand).distinct())
+    assert bloom.n_added == ref.n_added == n_seen + n_exact
+    a = bloom.to_df(spark).select("pid", F.col("bitset").alias("a"))
+    b = ref.to_df(spark).select("pid", F.col("bitset").alias("b"))
+    n_diff = (a.join(b, "pid", "full_outer")
+              .filter(~F.col("a").eqNullSafe(F.col("b"))).count())
+    assert n_diff == 0, f"{n_diff} partitions differ from a fresh add"
     return {"mode": "dedup", "master": master, "seen": int(n_seen),
             "candidates": int(n_cand), "new": int(n_exact),
             "exact_antijoin_s": round(t_exact, 2),
             "bloom_build_s": round(t_build, 2),
+            "bloom_absorb_s": round(t_absorb, 2),
             "bloom_prefilter_s": round(t_bloom, 2),
             "bloom_fpr_est": round(bloom.fp_rate_estimate(), 4)}
 

@@ -10,18 +10,27 @@ Design — the filter IS a distributed table, never driver-resident:
   each partition owns an m-bit array, held as one row of a
   ``(pid int, bitset binary)`` DataFrame (``self._table``, localCheckpointed
   so repeated merges don't grow lineage)
-- build (``add``): one ``applyInPandas`` pass per partition computes the
-  BATCH's bit array (numpy, vectorized Kirsch-Mitzenmacher double hashing
-  from the two independent JVM-side hashes xxhash64 + murmur3 — no Python
-  hashing at all); the batch arrays OR-merge into the existing bitset table
-  via a full-outer join on pid + an Arrow-batched binary OR. The bit matrix
-  NEVER materializes on the driver: the only driver transfer in add() is
-  one scalar row count, observed by the merge job itself. At 10^10 keys
-  (~12 GB of bits) nothing round-trips.
-- probe (``maybe_seen_flag``): candidates shuffle by pid and cogroup
-  against the bitset table — each of the P partition arrays travels
-  exactly once, to the task that owns that url_hash range; neither the
-  driver nor any executor holds the whole matrix
+- hashing: vectorized Kirsch-Mitzenmacher double hashing (numpy) from the
+  two independent JVM-side hashes xxhash64 + murmur3 — no Python hashing
+  at all; ``_set_bits`` is the one routine that writes bits
+- probe + absorb (the crawl cycle's path): candidates shuffle by pid and
+  cogroup against the bitset table — each of the P partition arrays
+  travels exactly once, to the task that owns that url_hash range. The
+  one kernel (``probe_kernel``) flags every candidate against the old
+  bits, then ORs in every candidate's positions and emits the grown
+  bitset as one extra row per pid. ``prefilter`` persists that output;
+  ``absorb(n_new)`` pins its bitset rows as the new table (an eager
+  localCheckpoint over the persisted rows — no Python, no second pass
+  over the keys). Exact because the filter holds every seen key: ORing a
+  seen candidate sets no new bit, so ORing all candidates equals ORing
+  only the new ones.
+- bulk build (``add``: seeding, rebuilds, resume without a snapshot): one
+  ``applyInPandas`` pass per partition computes the batch's bit array, and
+  a full-outer join on pid + an Arrow-batched binary OR merges it into the
+  table. The only driver transfer is one scalar row count, observed by
+  the merge job itself.
+- the bit matrix NEVER materializes on the driver: at 10^10 keys
+  (~12 GB of bits) nothing round-trips
 - persistence: ``to_df`` returns the table itself (plus scalar meta
   columns) so a snapshot commit writes it directly; ``from_df`` re-roots
   the table on the loaded parquet — neither direction collects bitsets
@@ -29,6 +38,9 @@ Design — the filter IS a distributed table, never driver-resident:
   anti-join entirely; only probable-duplicates reach the exact verify. At
   10^10 URLs with ~1% discovery-duplication this removes ~99% of the
   anti-join's build-side traffic.
+
+The probe's single numpy pass that tests and then sets bits follows
+*Analyzing Vectorized Hash Tables Across CPU Architectures* (VLDB 2023).
 """
 
 from __future__ import annotations
@@ -60,6 +72,52 @@ def _positions(h1: np.ndarray, h2: np.ndarray, m: int, k: int) -> np.ndarray:
     j = np.arange(k, dtype=np.uint64)
     return ((u1[:, None] + j[None, :] * u2[:, None])
             % np.uint64(m)).astype(np.int64)
+
+
+def _set_bits(bits: np.ndarray, pos: np.ndarray) -> None:
+    """OR every bit position in ``pos`` into the byte array ``bits`` in
+    place (bit p lives in byte p >> 3, at bit p & 7)."""
+    pos = pos.ravel()
+    np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+
+
+def _nullable(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Integer and bool columns as pandas' nullable dtypes, so the
+    kernel's null-padded bitset row keeps them exact (a plain concat
+    would turn int64 into float64)."""
+    conv = {}
+    for c, dt in pdf.dtypes.items():
+        if dt.kind == "b":
+            conv[c] = "boolean"
+        elif dt.kind in "iu":
+            conv[c] = ("UInt" if dt.kind == "u" else "Int") + str(8 * dt.itemsize)
+    return pdf.astype(conv) if conv else pdf
+
+
+def probe_kernel(cand: pd.DataFrame, bits_pdf: pd.DataFrame, m: int, k: int,
+                 cols: list[str], flag: str) -> pd.DataFrame:
+    """The probe for one pid: ``cand`` holds that pid's candidates
+    (``cols`` plus the ``_h1``/``_h2``/``_pid`` hashes), ``bits_pdf`` its
+    (pid, bitset) row, if the table has one. Returns the candidates'
+    ``cols`` with ``flag`` (False ⇒ definitively never seen), tested
+    against the old bits, plus one extra row holding only ``_pid`` and
+    ``_bitset``: the old bits with every candidate's positions ORed in. A
+    pid with bits but no candidates re-emits its bitset unchanged; a pid
+    with candidates but no bits starts from zeros."""
+    if len(bits_pdf):
+        pid = int(bits_pdf["pid"].iloc[0])
+        bits = np.frombuffer(bits_pdf["bitset"].iloc[0], dtype=np.uint8)
+    else:
+        pid = int(cand["_pid"].iloc[0])
+        bits = np.zeros(m // 8, dtype=np.uint8)
+    pos = _positions(cand["_h1"].to_numpy(), cand["_h2"].to_numpy(), m, k)
+    hit = ((bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0).all(axis=1)
+    grown = bits.copy()
+    _set_bits(grown, pos)
+    rows = _nullable(cand[cols]).assign(**{flag: pd.array(hit, dtype="boolean")})
+    grown_row = pd.DataFrame({"_pid": pd.array([pid], dtype="Int32"),
+                              "_bitset": [grown.tobytes()]})
+    return pd.concat([rows, grown_row], ignore_index=True)
 
 
 @F.pandas_udf(T.BinaryType())
@@ -97,6 +155,8 @@ class PartitionedBloom:
         self.n_added = 0
         self._table: DataFrame | None = None  # (pid, bitset) — authoritative
         self._last_flagged: DataFrame | None = None  # prefilter persist slot
+        # the last prefilter's grown (pid, bitset) rows, until absorbed
+        self._grown: DataFrame | None = None
 
     # -- hashing (JVM-side) -------------------------------------------------
     def _with_hashes(self, df: DataFrame, col: str) -> DataFrame:
@@ -117,8 +177,13 @@ class PartitionedBloom:
         pid and OR-merge executor-side. The bit matrix never reaches the
         driver — the one scalar (rows added) comes from an Observation on
         the merge's checkpoint job, so no other job runs. Returns it; when
-        it is 0 the filter is left exactly as it was."""
+        it is 0 the filter is left exactly as it was.
+
+        For bulk builds (seeding, rebuilds, a resume without a snapshot);
+        a crawl cycle's new keys go in through ``absorb``. An add drops
+        any probe not yet absorbed: its grown bits predate this add."""
         m, k = self.m, self.k
+        self._grown = None
 
         schema = T.StructType([
             T.StructField("pid", T.IntegerType()),
@@ -129,10 +194,8 @@ class PartitionedBloom:
         def build(key, pdf):
             pid = int(key[0])
             bits = np.zeros(m // 8, dtype=np.uint8)
-            pos = _positions(pdf["_h1"].to_numpy(),
-                             pdf["_h2"].to_numpy(), m, k).ravel()
-            np.bitwise_or.at(bits, pos >> 3,
-                             (1 << (pos & 7)).astype(np.uint8))
+            _set_bits(bits, _positions(pdf["_h1"].to_numpy(),
+                                       pdf["_h2"].to_numpy(), m, k))
             return pd.DataFrame({"pid": [pid], "bitset": [bits.tobytes()],
                                  "n": [len(pdf)]})
 
@@ -199,43 +262,42 @@ class PartitionedBloom:
         out.n_added = 0
         out._table = None
         out._last_flagged = None
+        out._grown = None
         return out
 
     # -- probe ---------------------------------------------------------------
+    def _probe(self, spark: SparkSession, df: DataFrame, col: str,
+               flag: str) -> DataFrame:
+        """``probe_kernel`` over every pid: candidates shuffle by pid and
+        each task receives ONLY its own partition's bit array via cogroup
+        against the bitset TABLE — no driver or broadcast copy of the bit
+        matrix. At 10^10 keys (~12 GB of bits) each of the P partition
+        arrays travels exactly once, to the task that owns that url_hash
+        range. Rows with a null ``flag`` are the grown (``_pid``,
+        ``_bitset``) rows; every output column is nullable for them."""
+        m, k = self.m, self.k
+        cols = df.columns
+        schema = T.StructType(
+            [T.StructField(f.name, f.dataType) for f in df.schema.fields] +
+            [T.StructField(flag, T.BooleanType()),
+             T.StructField("_pid", T.IntegerType()),
+             T.StructField("_bitset", T.BinaryType())])
+
+        def kernel(cand: pd.DataFrame, bits_pdf: pd.DataFrame) -> pd.DataFrame:
+            return probe_kernel(cand, bits_pdf, m, k, cols, flag)
+
+        return (self._with_hashes(df, col).groupBy("_pid")
+                .cogroup(self._table_or_empty(spark).groupBy("pid"))
+                .applyInPandas(kernel, schema=schema))
+
     def maybe_seen_flag(self, spark: SparkSession, df: DataFrame,
                         col: str = "url",
                         flag: str = "_maybe_seen") -> DataFrame:
-        """Adds a boolean column: False ⇒ definitively never seen.
-        Co-partitioned probe: candidates shuffle by pid and each task
-        receives ONLY its own partition's bit array via cogroup against the
-        bitset TABLE — no driver or broadcast copy of the bit matrix. At
-        10^10 keys (~12 GB of bits) each of the P partition arrays travels
-        exactly once, to the task that owns that url_hash range."""
-        m, k = self.m, self.k
-        orig_cols = [f.name for f in df.schema.fields]
-        out_schema = T.StructType(list(df.schema.fields) +
-                                  [T.StructField(flag, T.BooleanType())])
-        bloom_df = self._table_or_empty(spark)
-        hashed = self._with_hashes(df, col)
-
-        def probe_group(cand: pd.DataFrame, bits_pdf: pd.DataFrame) -> pd.DataFrame:
-            out = cand[orig_cols].copy()
-            if not len(cand):
-                out[flag] = pd.Series([], dtype=bool)
-                return out
-            if not len(bits_pdf):
-                out[flag] = False
-                return out
-            bits = np.frombuffer(bits_pdf["bitset"].iloc[0], dtype=np.uint8)
-            pos = _positions(cand["_h1"].to_numpy(),
-                             cand["_h2"].to_numpy(), m, k)
-            byte = bits[pos >> 3]
-            hit = (byte & (1 << (pos & 7)).astype(np.uint8)) != 0
-            out[flag] = hit.all(axis=1)
-            return out
-
-        return (hashed.groupBy("_pid").cogroup(bloom_df.groupBy("pid"))
-                .applyInPandas(probe_group, schema=out_schema))
+        """Adds a boolean column: False ⇒ definitively never seen. The
+        candidate rows of the one probe (``_probe``); the grown bits are
+        dropped and the filter is left as it was."""
+        return (self._probe(spark, df, col, flag)
+                .filter(F.col(flag).isNotNull()).drop("_pid", "_bitset"))
 
     def prefilter(self, spark: SparkSession, candidates: DataFrame,
                   col: str, seen: DataFrame,
@@ -253,34 +315,66 @@ class PartitionedBloom:
           suspects are bounded (the crawl cycle's politeness-budget links)
           and seen is huge. Candidates must be unique on ``col``.
 
-        The flagged intermediate is persisted (both the definite-new and
-        suspect branches read it); the PREVIOUS call's persist is released
-        here, and ``release()`` drops the last one — so a crawl loop
-        calling prefilter once per cycle holds at most one cycle's flags
-        in executor storage, not an unbounded accumulation.
+        The probe output (flagged candidates plus the grown bitset rows)
+        is persisted: the definite-new and suspect branches read it, and
+        ``absorb`` pins its bitset rows as the new table. The PREVIOUS
+        call's persist is released here, and ``release()`` drops the last
+        one — so a crawl loop calling prefilter once per cycle holds at
+        most one cycle's flags in executor storage, not an unbounded
+        accumulation. The filter itself is unchanged until ``absorb``; a
+        caller that only dedups (``incremental_dedup``) never absorbs.
 
-        CONTRACT: materialize (checkpoint/collect/write) the returned
-        DataFrame BEFORE the next ``prefilter()`` or ``add()`` on this
-        filter. The result is lazy; once the previous persist is released
-        and the filter has absorbed more keys, recomputing an old result
-        re-probes the now-fuller filter and can reroute rows
-        (definite-new → suspect), silently changing what downstream sees.
-        The engine always localCheckpoints new_rows first
-        (crawler.run_cycle) — external callers must do the same."""
+        CONTRACT: materialize (checkpoint/collect/write/persist + action)
+        the returned DataFrame, then ``absorb`` its new-row count, BEFORE
+        the next ``prefilter()`` or ``add()`` on this filter. The result is
+        lazy; once the previous persist is released and the filter has
+        absorbed more keys, recomputing an old result re-probes the
+        now-fuller filter and can reroute rows (definite-new → suspect),
+        silently changing what downstream sees; and the next prefilter or
+        add drops the grown bits. The engine materializes its new rows in
+        the cycle's delta fold and absorbs right after (crawler.run_cycle)
+        — external callers must do the same."""
         self.release()
-        flagged = self.maybe_seen_flag(spark, candidates, col).persist()
+        flagged = self._probe(spark, candidates, col, "_maybe_seen").persist()
         self._last_flagged = flagged
-        definite_new = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-        suspects = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
+        self._grown = (flagged.filter(F.col("_bitset").isNotNull())
+                       .select(F.col("_pid").alias("pid"),
+                               F.col("_bitset").alias("bitset")))
+        rows = flagged.drop("_pid", "_bitset")
+        definite_new = rows.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
+        suspects = rows.filter(F.col("_maybe_seen")).drop("_maybe_seen")
         if verify == "broadcast":
             verified_new = minus_seen(suspects, seen, col)
         else:
             verified_new = suspects.join(seen, col, "left_anti")
         return definite_new.unionByName(verified_new)
 
+    def absorb(self, n_new: int) -> None:
+        """Take the last ``prefilter``'s keys into the filter: its grown
+        bitset rows (every candidate's bits ORed into the old table)
+        become the table, pinned by an eager localCheckpoint over the
+        persisted probe output — one JVM job, no Python — and ``n_new``
+        (the prefilter's result row count) is added to ``n_added``.
+
+        Exact when the filter already holds every key of ``seen``, as the
+        crawl's and the streaming ingest's filters do: a candidate the
+        verify drops sets no new bit, so the table equals an ``add`` of
+        the new rows alone. With ``n_new == 0`` no bit changes and no job
+        runs. Raises when no prefilter is pending (none ran, or it was
+        already absorbed, released or superseded by an ``add``)."""
+        if self._grown is None:
+            raise RuntimeError("absorb() needs a prefilter() that has not "
+                               "been absorbed, released or followed by add()")
+        grown, self._grown = self._grown, None
+        if n_new:
+            self._table = grown.localCheckpoint(eager=True)
+            self.n_added += n_new
+
     def release(self) -> None:
-        """Unpersist the last prefilter's flagged intermediate (call after
-        downstream actions have consumed the result)."""
+        """Unpersist the last prefilter's probe output (call after
+        downstream actions have consumed the result, and after
+        ``absorb``); a pending absorb is dropped with it."""
+        self._grown = None
         if self._last_flagged is not None:
             try:
                 self._last_flagged.unpersist()
@@ -333,4 +427,5 @@ class PartitionedBloom:
         obj.P = int(p) if p is not None else int(df.count())
         obj._table = df.select("pid", "bitset").localCheckpoint(eager=True)
         obj._last_flagged = None
+        obj._grown = None
         return obj

@@ -84,11 +84,12 @@ HOST_MEMO_SIZE = 10000
 # × 50k links ⇒ ~10^6 rows).
 SEQ_PARTITION_THRESHOLD = 65536
 
-# Bloom capacity planning for 10^10-key frontiers: after every add the
-# engine checks the analytic fp_rate_estimate; above this the filter stops
-# filtering (every candidate routes to the exact verify), so it is rebuilt
-# EMPTY at 2x partitions + 2x bits/partition and repopulated from the
-# frontier (one distributed add), repeating until the estimate clears it.
+# Bloom capacity planning for 10^10-key frontiers: after every add or
+# absorb the engine checks the analytic fp_rate_estimate; above this the
+# filter stops filtering (every candidate routes to the exact verify), so
+# it is rebuilt EMPTY at 2x partitions + 2x bits/partition and repopulated
+# from the frontier (one distributed add), repeating until the estimate
+# clears it.
 # The estimate is logged in the metrics table (bloom_fpr_est column).
 BLOOM_REBUILD_FPR = 0.05
 
@@ -1083,8 +1084,10 @@ class SparkCrawler:
                 self.max_seq += n_new
         stats.links_new = n_new
         stats.dedup_hits = int(n_links - n_new)
-        if self._bloom is not None and n_new:
-            self._bloom.add(self.spark, new_rows.select("url"))
+        if self._bloom is not None and new_rows is not None:
+            # the probe already ORed every candidate into its grown bits;
+            # the delta fold materialized them, so this only pins them
+            self._bloom.absorb(n_new)
             self._maybe_rebuild_bloom()
         kernel_out.unpersist()
         found.unpersist()
@@ -1119,8 +1122,8 @@ class SparkCrawler:
         return out
 
     def _maybe_rebuild_bloom(self) -> None:
-        """Capacity planning (run after every bloom add): when the analytic
-        FPR estimate crosses BLOOM_REBUILD_FPR the filter has
+        """Capacity planning (run after every bloom add or absorb): when the
+        analytic FPR estimate crosses BLOOM_REBUILD_FPR the filter has
         saturated — rebuild at 2× partitions/bits from the frontier (the
         authoritative seen set), doubling until the estimate clears the
         threshold (bounded at 8 doublings). Dedup results are unchanged

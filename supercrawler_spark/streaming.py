@@ -175,7 +175,8 @@ def streaming_link_ingest(spark: SparkSession, links_dir: str,
     Cross-batch dedup state is the engine's own PartitionedBloom: each
     foreachBatch calls ``prefilter`` (definitively-new rows skip the exact
     verify; the seen table streams through broadcast semi/anti joins, never
-    shuffles) and then ``add``s the admitted urls — exactly how a
+    shuffles) and then ``absorb``s the admitted urls (the probe has already
+    ORed the batch's bits; absorb pins them) — exactly how a
     continuously-running crawler would keep its seen-filter current, and
     identical state management to the batch engine (the filter is a
     distributed pid-keyed table; nothing driver-resident). With
@@ -210,9 +211,10 @@ def streaming_link_ingest(spark: SparkSession, links_dir: str,
         new = bloom.prefilter(spark, cand, "url", seen_all,
                               verify="broadcast")
         new = new.persist()
-        if new.count():
+        n_new = new.count()
+        if n_new:
             new.write.mode("append").parquet(out_dir)
-            bloom.add(spark, new, "url")
+        bloom.absorb(n_new)
         new.unpersist()
 
     ckpt = tempfile.mkdtemp(prefix="sc-stream-ckpt-")

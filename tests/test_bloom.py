@@ -2,6 +2,7 @@
 reference probe, persistence and capacity planning."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from supercrawler_spark import bloom as bloom_mod
@@ -376,3 +377,175 @@ def test_empty_add_leaves_the_filter_as_it_was(spark, url_sets, tmp_path):
         assert (back.P, back.m, back.k, back.n_added) == \
             (bloom.P, bloom.m, bloom.k, bloom.n_added)
         assert rows(back) == rows(bloom)
+
+
+def _table_rows(spark, bloom):
+    return sorted((r["pid"], bytes(r["bitset"])) for r in
+                  bloom.to_df(spark).select("pid", "bitset").collect())
+
+
+def test_absorbing_crawl_equals_bulk_add_of_the_frontier(spark):
+    """A Bloom crawl that takes each cycle's keys in through the probe
+    (prefilter + absorb), with a commit and a kill + resume, ends with the
+    bitset table a single bulk add of the whole frontier builds, byte for
+    byte, and ``n_added`` equal to the frontier's row count."""
+    import tempfile
+
+    from supercrawler_spark import fixtures
+    from supercrawler_spark.crawler import CrawlConfig, SparkCrawler
+
+    seeds, web, _ = fixtures.make_web_fixture(n_hosts=3, pages_per_host=4)
+    web_df = spark.createDataFrame(web)
+
+    def cfg():
+        return CrawlConfig(budget=3, use_bloom=True, bloom_partitions=4,
+                           bloom_capacity=1 << 12, checkpoint_every=2)
+
+    wd = tempfile.mkdtemp()
+    first = SparkCrawler(spark, web_df, wd, cfg())
+    first.seed(list(seeds["url"]))
+    n_first = sum(s.popped > 0 for s in first.crawl(max_cycles=3))
+    resumed = SparkCrawler(spark, web_df, wd, cfg())  # the first is "killed"
+    assert resumed.resume()
+    n_second = sum(s.popped > 0 for s in resumed.crawl(max_cycles=100))
+    assert n_first == 3 and n_first + n_second >= 4
+
+    frontier = resumed.frontier.select("url")
+    n_rows = frontier.count()
+    assert resumed._bloom.P == 4  # no capacity rebuild: one filter shape
+    assert resumed._bloom.n_added == n_rows
+    ref = PartitionedBloom(4, 1 << 12)
+    assert ref.add(spark, frontier) == n_rows
+    assert _table_rows(spark, resumed._bloom) == _table_rows(spark, ref)
+
+
+def test_steady_bloom_cycle_runs_no_bulk_add(spark, monkeypatch):
+    """A steady Bloom cycle takes its new keys in through ``absorb``;
+    ``PartitionedBloom.add`` (the bulk build) is not called."""
+    import tempfile
+
+    from supercrawler_spark import fixtures
+    from supercrawler_spark.crawler import CrawlConfig, SparkCrawler
+
+    seeds, web, _ = fixtures.make_web_fixture(n_hosts=2, pages_per_host=3)
+    cr = SparkCrawler(spark, spark.createDataFrame(web), tempfile.mkdtemp(),
+                      CrawlConfig(budget=6, use_bloom=True, bloom_partitions=4,
+                                  bloom_capacity=1 << 12))
+    cr.seed(sorted(set(seeds["url"])))
+    calls = {"add": 0, "absorb": 0}
+    add, absorb = PartitionedBloom.add, PartitionedBloom.absorb
+
+    def spy_add(self, *a, **kw):
+        calls["add"] += 1
+        return add(self, *a, **kw)
+
+    def spy_absorb(self, *a, **kw):
+        calls["absorb"] += 1
+        return absorb(self, *a, **kw)
+
+    monkeypatch.setattr(PartitionedBloom, "add", spy_add)
+    monkeypatch.setattr(PartitionedBloom, "absorb", spy_absorb)
+    new = sum(cr.run_cycle().links_new for _ in range(2))
+    assert new > 0
+    assert calls == {"add": 0, "absorb": 2}
+
+
+def _kernel_frames(rng, n, pid):
+    """One pid's candidates as the cogroup hands them to the kernel: the
+    columns plus their hashes; ``big`` is an int64 past float precision."""
+    return pd.DataFrame({
+        "url": [f"http://h.example/{pid}/{i}" for i in range(n)],
+        "big": np.arange(n, dtype=np.int64) + (1 << 60),
+        "_h1": rng.integers(-2**63, 2**63 - 1, n, dtype=np.int64),
+        "_h2": rng.integers(-2**31, 2**31 - 1, n, dtype=np.int64),
+        "_pid": np.full(n, pid, dtype=np.int32)})
+
+
+def test_probe_kernel_equals_numpy_reference():
+    """The probe kernel called on pandas frames outside Spark: flags are
+    the bit test against the old bits, the grown row is the old bits with
+    every candidate's ``_positions`` set — for a pid with bits and
+    candidates, one with bits but no candidates (re-emitted unchanged) and
+    one with candidates but no bits (grown from zeros). Candidate columns
+    pass through exactly."""
+    m, k = 4096, 7
+    rng = np.random.default_rng(5)
+
+    def reference(old, cand):
+        bits = np.unpackbits(old, bitorder="little").astype(bool)
+        pos = bloom_mod._positions(cand["_h1"].to_numpy(),
+                                   cand["_h2"].to_numpy(), m, k)
+        flags = bits[pos].all(axis=1)
+        bits[pos.ravel()] = True
+        return flags, np.packbits(bits, bitorder="little").tobytes()
+
+    # ~25% of the bits set, plus all of the first 100 candidates' bits
+    some = _kernel_frames(rng, 300, 1)
+    _, filled = reference(rng.integers(0, 256, m // 8, dtype=np.uint8)
+                          & rng.integers(0, 256, m // 8, dtype=np.uint8),
+                          some.iloc[:100])
+    bits_pdf = pd.DataFrame({"pid": [1], "bitset": [filled]})
+    no_bits = pd.DataFrame({"pid": pd.Series([], dtype=np.int32),
+                            "bitset": pd.Series([], dtype=object)})
+    cases = {
+        "bits and candidates": (some, bits_pdf, filled, 1),
+        "bits, no candidates": (some.iloc[:0], bits_pdf, filled, 1),
+        "candidates, no bits": (_kernel_frames(rng, 50, 2), no_bits,
+                                bytes(m // 8), 2),
+    }
+    flags = {}
+    for name, (cand, bits, before, pid) in cases.items():
+        out = bloom_mod.probe_kernel(cand, bits, m, k, ["url", "big"], "_f")
+        rows, grown = out[out["_f"].notna()], out[out["_f"].isna()]
+        want_flags, want_bits = reference(
+            np.frombuffer(before, dtype=np.uint8), cand)
+        flags[name] = rows["_f"].astype(bool).to_numpy()
+        assert flags[name].tolist() == want_flags.tolist(), name
+        assert len(grown) == 1 and int(grown["_pid"].iloc[0]) == pid, name
+        assert grown["_bitset"].iloc[0] == want_bits, name
+        assert rows["url"].tolist() == cand["url"].tolist(), name
+        assert rows["big"].astype("int64").tolist() == \
+            cand["big"].tolist(), name
+    got = flags["bits and candidates"]
+    assert got[:100].all() and not got.all()
+    assert not flags["candidates, no bits"].any()
+
+
+def test_incremental_dedup_leaves_the_filter_unchanged(spark):
+    """``incremental_dedup`` prefilters but never absorbs: the filter's
+    table and key count are what they were before."""
+    from supercrawler_spark.datapipe import dedup as DD
+
+    history = spark.createDataFrame(
+        [(f"fp{i}",) for i in range(300)], "fp string")
+    batch = spark.createDataFrame(
+        [(i, f"doc {i % 400}") for i in range(500)], "doc_id long, text string")
+    bloom = PartitionedBloom(partitions=4, capacity=1 << 12)
+    bloom.add(spark, history, col="fp")
+    table, before = bloom._table, _table_rows(spark, bloom)
+    assert DD.incremental_dedup(batch, history, bloom=bloom).count() > 0
+    assert bloom._table is table and bloom.n_added == 300
+    assert _table_rows(spark, bloom) == before
+    bloom.release()
+
+
+def test_absorb_needs_a_pending_probe(spark, url_sets):
+    """``absorb`` takes the last prefilter's bits exactly once: with no
+    prefilter, after an absorb, after ``release`` or after an ``add`` (its
+    grown bits predate the add) it raises."""
+    seen, cand = url_sets
+    bloom = PartitionedBloom(partitions=8, capacity=1 << 16)
+    with pytest.raises(RuntimeError):
+        bloom.absorb(1)
+    bloom.add(spark, seen)
+    n = bloom.prefilter(spark, cand, "url", seen).count()
+    bloom.absorb(n)
+    assert n == 10000 and bloom.n_added == 30000
+    with pytest.raises(RuntimeError):
+        bloom.absorb(n)
+    for undo in (bloom.release, lambda: bloom.add(spark, seen.limit(1))):
+        bloom.prefilter(spark, cand, "url", seen).count()
+        undo()
+        with pytest.raises(RuntimeError):
+            bloom.absorb(0)
+    bloom.release()

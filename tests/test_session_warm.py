@@ -36,15 +36,53 @@ def test_daemon_module_only_on_local_masters():
         assert _daemon_conf(master) == {}, master
 
 
+def test_worker_sockets_are_unix_on_local_masters(spark):
+    """Local masters talk to their Python workers over Unix domain sockets
+    in one short per-process directory (a socket path has 107 bytes);
+    other masters keep Spark's TCP default."""
+    from supercrawler_spark.session import _worker_socket_conf
+    for master in ("local[4]", "local-cluster[2,1,1024]"):
+        conf = _worker_socket_conf(master)
+        assert conf["spark.python.unix.domain.socket.enabled"] == "true"
+        d = conf["spark.python.unix.domain.socket.dir"]
+        assert os.path.isdir(d) and len(d) + 42 < 107, d
+    assert _worker_socket_conf("yarn") == {}
+    assert spark.conf.get("spark.python.unix.domain.socket.enabled") == "true"
+
+
 def test_warm_flag_recorded(spark):
     # get_spark ran _warm_session on this (session-scoped) fixture
     assert spark.conf.get("spark.supercrawler.warmed") == "1"
 
 
-def test_repo_on_worker_pythonpath(spark):
-    # the daemon child process resolves supercrawler_spark via PYTHONPATH
+def test_repo_on_worker_pythonpath(spark, monkeypatch):
+    """The repo reaches the workers through ``spark.executorEnv.PYTHONPATH``:
+    a pandas UDF imports the package from the repo inside a worker, and
+    get_spark leaves the driver's own environment as it found it."""
+    from supercrawler_spark.session import get_spark
+
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    assert repo in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    monkeypatch.setenv("PYTHONPATH", os.pathsep.join(
+        p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+        if p and p != repo))
+    before = dict(os.environ)
+    assert get_spark("supercrawler-tests", master="local[4]",
+                     shuffle_partitions=4) is spark
+    assert dict(os.environ) == before
+
+    def where(s):
+        import os
+
+        import supercrawler_spark
+        return pd.Series([os.path.dirname(os.path.dirname(
+            supercrawler_spark.__file__)) + "|" + os.environ["PYTHONPATH"]]
+            * len(s))
+    where.__annotations__ = {"s": pd.Series, "return": pd.Series}
+    got = spark.range(1).select(
+        F.pandas_udf(where, "string")("id")).first()[0]
+    pkg_parent, worker_path = got.split("|", 1)
+    assert pkg_parent == repo
+    assert repo in worker_path.split(os.pathsep)
 
 
 def test_pydaemon_module_preimports_stack():
@@ -108,3 +146,50 @@ def test_pydaemon_pins_blas_threads_unless_set():
 
     assert run({}) == "1,1,1"
     assert run({"OMP_NUM_THREADS": "3"}) == "1,1,3"
+
+
+def test_pydaemon_guards_zip_directory_rereads(tmp_path):
+    """In a fresh interpreter without Spark: after the daemon module is
+    imported, ``importlib.invalidate_caches()`` re-reads no zip directory
+    while the archive is unchanged; once the archive is rewritten with a
+    new module it is re-read and the new module imports. On Python 3.12+
+    (whose zipimport already does this) the guard installs nothing."""
+    import subprocess
+
+    code = (
+        "import importlib, os, sys, zipfile, zipimport\n"
+        f"zp = {str(tmp_path / 'zpkg.zip')!r}\n"
+        "def write(mods):\n"
+        "    with zipfile.ZipFile(zp, 'w') as z:\n"
+        "        z.writestr('zpkg/__init__.py', '')\n"
+        "        for m in mods:\n"
+        "            z.writestr(f'zpkg/{m}.py', f'X = {m!r}\\n')\n"
+        "write(['a'])\n"
+        "sys.path.insert(0, zp)\n"
+        "import zpkg.a\n"
+        "stock = zipimport.zipimporter.invalidate_caches\n"
+        "import supercrawler_spark.pydaemon as daemon\n"
+        "guarded = zipimport.zipimporter.invalidate_caches\n"
+        "assert (guarded is not stock) == (sys.version_info < (3, 12))\n"
+        "assert daemon._guard_zip_rereads((3, 12, 0)) is False\n"
+        "assert zipimport.zipimporter.invalidate_caches is guarded\n"
+        "if sys.version_info < (3, 12):\n"
+        "    reads = []\n"
+        "    read = zipimport._read_directory\n"
+        "    def counting(archive):\n"
+        "        reads.append(archive)\n"
+        "        return read(archive)\n"
+        "    zipimport._read_directory = counting\n"
+        "    importlib.invalidate_caches()\n"
+        "    importlib.invalidate_caches()\n"
+        "    assert reads == [], reads\n"
+        "    write(['a', 'b'])\n"
+        "    importlib.invalidate_caches()\n"
+        "    assert reads == [zp], reads\n"
+        "    import zpkg.b\n"
+        "    assert zpkg.b.X == 'b'\n"
+        "print('ok')\n")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=repo,
+                         capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == "ok", out.stderr
