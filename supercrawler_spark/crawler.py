@@ -61,7 +61,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from . import functions as SF
 from . import urls as urls_mod
 from .handlers import HandlerRegistry, HandlersError, default_registry
-from .storage import AppendLog, SnapshotStore
+from .storage import AppendLog, SnapshotStore, run_concurrently
 
 YEAR_MS = float(urls_mod.YEAR_MS)
 HOUR_MS = 3600000.0
@@ -660,7 +660,6 @@ class SparkCrawler:
         return True
 
     def _commit_snapshot(self) -> None:
-        self._flush_logs()
         # frontier sorted by next_fetch_time within partitions → parquet
         # min/max stats make the due-filter prune files at scale (O1)
         tables = {"frontier": self.frontier
@@ -679,11 +678,12 @@ class SparkCrawler:
         # meta carries ONLY scalars — per-host decay state is a table now
         # (an O(hosts) manifest entry would put the host universe back on
         # the driver at web scale)
-        self.store.commit(
-            tables,
-            meta={"cycle_id": self.cycle_id, "cycle_time": self.cycle_time,
-                  "max_seq": self.max_seq},
-        )
+        meta = {"cycle_id": self.cycle_id, "cycle_time": self.cycle_time,
+                "max_seq": self.max_seq}
+        # the log flush writes tables of its own: it runs beside the commit
+        run_concurrently(self.spark,
+                         [self._flush_logs,
+                          lambda: self.store.commit(tables, meta=meta)])
         # compaction: the snapshot just written becomes the base layer and
         # the delta resets — the only O(|frontier|) write, amortized over
         # checkpoint_every cycles

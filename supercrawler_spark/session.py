@@ -173,6 +173,16 @@ def get_spark(app_name: str = "supercrawler-spark", master: str | None = None,
         # recompiles them all (a static conf: set before the session exists)
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.session.timeZone", "UTC")
+        # with it on, every pyspark.sql.functions / Column call records its
+        # Python call site for error messages: ~4 py4j round trips, a stack
+        # walk and a failed IPython import per call, ~190 calls per crawl
+        # cycle. Pass it back on through extra_conf to debug a query.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # what the engine caches is batch-sized and read once or twice in
+        # a cycle (fetch join, kernel output, outcome fold, probe output,
+        # new rows): building each column tries every encoder and saves
+        # little memory, so the cache is stored as is
+        .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
     )
     extra_conf = extra_conf or {}
     for k, v in {**_daemon_conf(master), **_worker_socket_conf(master),

@@ -22,6 +22,7 @@ import os
 import shutil
 import tempfile
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -34,6 +35,23 @@ def _read(spark: SparkSession, path: str,
     footers."""
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
+
+
+def run_concurrently(spark: SparkSession, thunks: list) -> list:
+    """Call each zero-argument callable on a thread of its own and return
+    their results in order once every one has finished; the first failure
+    is raised after the others end. Each thread carries the caller's Spark
+    local properties (job group, scheduler pool) and ``spark``'s job tags,
+    so the jobs it starts are tagged as if the caller ran them. A commit's
+    writes are small jobs whose cost is mostly driver-side (planning, the
+    output committer's renames): side by side, those fixed costs overlap."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    from pyspark import inheritable_thread_target
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(len(thunks)) as pool:
+        futures = [pool.submit(inherit(t)) for t in thunks]
+    return [f.result() for f in futures]
 
 
 class SnapshotStore:
@@ -61,16 +79,18 @@ class SnapshotStore:
     # -- snapshots ---------------------------------------------------------
     def commit(self, tables: dict[str, DataFrame], meta: dict | None = None,
                keep_last: int = 3) -> int:
-        """Write a new snapshot version containing the given tables.
-        Returns the committed version number."""
+        """Write a new snapshot version containing the given tables, side
+        by side (``run_concurrently``); the manifest is written only after
+        every table is. Returns the committed version number."""
         prev = self.read_manifest()
         version = (prev["version"] + 1) if prev else 0
         vdir = os.path.join(self.root, f"v{version:06d}")
-        paths, counts = {}, {}
-        for name, df in tables.items():
-            path = os.path.join(vdir, name)
-            df.write.mode("overwrite").parquet(path)
-            paths[name] = path
+        paths = {name: os.path.join(vdir, name) for name in tables}
+        run_concurrently(
+            next(iter(tables.values())).sparkSession if tables else None,
+            [(lambda df=df, path=paths[name]:
+              df.write.mode("overwrite").parquet(path))
+             for name, df in tables.items()])
         manifest = {
             "version": version,
             "committed_at": time.time(),

@@ -50,6 +50,34 @@ def test_worker_sockets_are_unix_on_local_masters(spark):
     assert spark.conf.get("spark.python.unix.domain.socket.enabled") == "true"
 
 
+def test_call_sites_are_not_captured_per_expression(spark, monkeypatch):
+    """Building a Column does not record its Python call site (a stack walk
+    and ~4 py4j round trips per ``pyspark.sql.functions`` call) unless a
+    caller turns ``spark.python.sql.dataFrameDebugging.enabled`` back on."""
+    import pyspark.errors.utils as err_utils
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+    def capture(depth):
+        raise AssertionError("call site captured")
+    monkeypatch.setattr(err_utils, "_capture_call_site", capture)
+    col = F.when(F.col("a") > F.lit(1), F.lit("x")).otherwise(F.concat(
+        F.lit("y"), F.col("b").cast("string")))
+    assert spark.range(2).select(
+        F.lit(2).alias("a"), F.col("id").alias("b")).select(col).first()[0] == "x"
+
+
+def test_cached_frames_are_stored_uncompressed(spark):
+    """The engine caches only batch-sized frames it reads once or twice a
+    cycle, so the in-memory cache skips columnar compression."""
+    assert spark.conf.get("spark.sql.inMemoryColumnarStorage.compressed") \
+        == "false"
+    df = spark.range(100).select((F.col("id") % 3).alias("k")).persist()
+    try:
+        assert df.groupBy("k").count().orderBy("k").collect()[2]["count"] == 33
+    finally:
+        df.unpersist()
+
+
 def test_warm_flag_recorded(spark):
     # get_spark ran _warm_session on this (session-scoped) fixture
     assert spark.conf.get("spark.supercrawler.warmed") == "1"
