@@ -9,26 +9,26 @@ Design — the filter IS a distributed table, never driver-resident:
 - the url_hash space is split into P partitions by pmod(murmur3(url), P);
   each partition owns an m-bit array, held as one row of a
   ``(pid int, bitset binary)`` DataFrame (``self._table``, localCheckpointed
-  so repeated merges don't grow lineage)
+  so repeated adds and absorbs don't grow lineage)
 - hashing: vectorized Kirsch-Mitzenmacher double hashing (numpy) from the
   two independent JVM-side hashes xxhash64 + murmur3 — no Python hashing
   at all; ``_set_bits`` is the one routine that writes bits
-- probe + absorb (the crawl cycle's path): candidates shuffle by pid and
-  cogroup against the bitset table — each of the P partition arrays
-  travels exactly once, to the task that owns that url_hash range. The
-  one kernel (``probe_kernel``) flags every candidate against the old
-  bits, then ORs in every candidate's positions and emits the grown
-  bitset as one extra row per pid. ``prefilter`` persists that output;
-  ``absorb(n_new)`` pins its bitset rows as the new table (an eager
-  localCheckpoint over the persisted rows — no Python, no second pass
-  over the keys). Exact because the filter holds every seen key: ORing a
-  seen candidate sets no new bit, so ORing all candidates equals ORing
-  only the new ones.
-- bulk build (``add``: seeding, rebuilds, resume without a snapshot): one
-  ``applyInPandas`` pass per partition computes the batch's bit array, and
-  a full-outer join on pid + an Arrow-batched binary OR merges it into the
-  table. The only driver transfer is one scalar row count, observed by
-  the merge job itself.
+- one kernel writes every bit: candidates shuffle by pid and cogroup
+  against the bitset table — each of the P partition arrays travels
+  exactly once, to the task that owns that url_hash range. The kernel
+  (``probe_kernel``) ORs every candidate's positions into that pid's
+  bits and emits the grown bitset as one row per pid; asked for a flag,
+  it first tests each candidate against the old bits.
+- probe + absorb (the crawl cycle's path): ``prefilter`` persists the
+  flagged kernel output; ``absorb(n_new)`` pins its bitset rows as the
+  new table (an eager localCheckpoint over the persisted rows — no
+  Python, no second pass over the keys). Exact because the filter holds
+  every seen key: ORing a seen candidate sets no new bit, so ORing all
+  candidates equals ORing only the new ones.
+- bulk add (``add``: seeding, rebuilds, resume without a snapshot): the
+  same kernel without the flag — only the three hash columns shuffle,
+  and one eager localCheckpoint pins the grown rows as the table. The
+  only driver transfer is one scalar row count, observed by that job.
 - the bit matrix NEVER materializes on the driver: at 10^10 keys
   (~12 GB of bits) nothing round-trips
 - persistence: ``to_df`` returns the table itself (plus scalar meta
@@ -95,15 +95,16 @@ def _nullable(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def probe_kernel(cand: pd.DataFrame, bits_pdf: pd.DataFrame, m: int, k: int,
-                 cols: list[str], flag: str) -> pd.DataFrame:
+                 cols: list[str], flag: str | None) -> pd.DataFrame:
     """The probe for one pid: ``cand`` holds that pid's candidates
     (``cols`` plus the ``_h1``/``_h2``/``_pid`` hashes), ``bits_pdf`` its
-    (pid, bitset) row, if the table has one. Returns the candidates'
-    ``cols`` with ``flag`` (False ⇒ definitively never seen), tested
-    against the old bits, plus one extra row holding only ``_pid`` and
-    ``_bitset``: the old bits with every candidate's positions ORed in. A
-    pid with bits but no candidates re-emits its bitset unchanged; a pid
-    with candidates but no bits starts from zeros."""
+    (pid, bitset) row, if the table has one. Returns one row holding only
+    ``_pid`` and ``_bitset``: the old bits with every candidate's
+    positions ORed in. With a ``flag``, the candidates' ``cols`` come
+    first, with ``flag`` (False ⇒ definitively never seen) tested against
+    the old bits; with ``flag=None`` (the bulk add) the grown row is all
+    there is. A pid with bits but no candidates re-emits its bitset
+    unchanged; a pid with candidates but no bits starts from zeros."""
     if len(bits_pdf):
         pid = int(bits_pdf["pid"].iloc[0])
         bits = np.frombuffer(bits_pdf["bitset"].iloc[0], dtype=np.uint8)
@@ -111,29 +112,15 @@ def probe_kernel(cand: pd.DataFrame, bits_pdf: pd.DataFrame, m: int, k: int,
         pid = int(cand["_pid"].iloc[0])
         bits = np.zeros(m // 8, dtype=np.uint8)
     pos = _positions(cand["_h1"].to_numpy(), cand["_h2"].to_numpy(), m, k)
-    hit = ((bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0).all(axis=1)
     grown = bits.copy()
     _set_bits(grown, pos)
-    rows = _nullable(cand[cols]).assign(**{flag: pd.array(hit, dtype="boolean")})
     grown_row = pd.DataFrame({"_pid": pd.array([pid], dtype="Int32"),
                               "_bitset": [grown.tobytes()]})
+    if flag is None:
+        return grown_row
+    hit = ((bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0).all(axis=1)
+    rows = _nullable(cand[cols]).assign(**{flag: pd.array(hit, dtype="boolean")})
     return pd.concat([rows, grown_row], ignore_index=True)
-
-
-@F.pandas_udf(T.BinaryType())
-def _or_bitsets(a: pd.Series, b: pd.Series) -> pd.Series:
-    """OR-merge two binary bitset columns (either side nullable — a pid
-    present on only one side of the full-outer merge keeps its array)."""
-    out = []
-    for x, y in zip(a, b):
-        if x is None:
-            out.append(y)
-        elif y is None:
-            out.append(x)
-        else:
-            out.append((np.frombuffer(x, dtype=np.uint8)
-                        | np.frombuffer(y, dtype=np.uint8)).tobytes())
-    return pd.Series(out)
 
 
 class PartitionedBloom:
@@ -172,56 +159,34 @@ class PartitionedBloom:
 
     # -- build ---------------------------------------------------------------
     def add(self, spark: SparkSession, df: DataFrame, col: str = "url") -> int:
-        """Distributed build + merge: per-partition batch bit arrays
-        (applyInPandas UDAF) full-outer-join the existing bitset table on
-        pid and OR-merge executor-side. The bit matrix never reaches the
-        driver — the one scalar (rows added) comes from an Observation on
-        the merge's checkpoint job, so no other job runs. Returns it; when
-        it is 0 the filter is left exactly as it was.
+        """Bulk insert: ``probe_kernel`` without a flag over ``df[col]``'s
+        hashes, its grown (pid, bitset) rows pinned as the table by one
+        eager localCheckpoint. The bit matrix never reaches the driver —
+        the one scalar (rows added) comes from an Observation on the
+        input keys, read by that checkpoint job. Returns it; when it is 0
+        the filter is left exactly as it was.
 
         For bulk builds (seeding, rebuilds, a resume without a snapshot);
         a crawl cycle's new keys go in through ``absorb``. An add drops
         any probe not yet absorbed: its grown bits predate this add."""
-        m, k = self.m, self.k
         self._grown = None
-
-        schema = T.StructType([
-            T.StructField("pid", T.IntegerType()),
-            T.StructField("bitset", T.BinaryType()),
-            T.StructField("n", T.LongType()),
-        ])
-
-        def build(key, pdf):
-            pid = int(key[0])
-            bits = np.zeros(m // 8, dtype=np.uint8)
-            _set_bits(bits, _positions(pdf["_h1"].to_numpy(),
-                                       pdf["_h2"].to_numpy(), m, k))
-            return pd.DataFrame({"pid": [pid], "bitset": [bits.tobytes()],
-                                 "n": [len(pdf)]})
-
-        hashed = self._with_hashes(df, col).select("_h1", "_h2", "_pid")
-        batch = hashed.groupBy("_pid").applyInPandas(build, schema=schema)
-        new_bits = batch.select("pid", F.col("bitset").alias("_new"), "n")
-        if self._table is None:
-            merged = new_bits.select("pid", F.col("_new").alias("bitset"), "n")
-        else:
-            old = self._table.select("pid", F.col("bitset").alias("_old"))
-            merged = (old.join(new_bits, "pid", "full_outer")
-                      .select("pid", _or_bitsets(F.col("_old"), F.col("_new"))
-                              .alias("bitset"), "n"))
-        # the batch's row counts ride through the merge, so the frame the
-        # checkpoint runs is the one observed: an Observation completes
-        # only through its own frame's session, and ``df`` may come from
-        # another (a streaming micro-batch runs in a cloned session).
-        # eager localCheckpoint: truncates the merge lineage (cost per add
-        # stays O(P rows), not O(history)) and materializes executor-side
+        # only the hashes shuffle; the observed frame derives from ``df``,
+        # so it completes through ``df``'s session even when that is not
+        # ``spark`` (a streaming micro-batch runs in a cloned session)
         added = Observation()
-        merged = (merged.observe(added, F.sum("n").alias("n"))
-                  .localCheckpoint(eager=True))
-        total = int(added.get["n"] or 0)
+        hashed = (self._with_hashes(df, col).select("_h1", "_h2", "_pid")
+                  .observe(added, F.count(F.lit(1)).alias("n")))
+        # eager localCheckpoint: truncates the table's lineage (cost per
+        # add stays O(P rows), not O(history)) and materializes it
+        # executor-side
+        grown = (self._probe(spark, hashed, [], None)
+                 .select(F.col("_pid").alias("pid"),
+                         F.col("_bitset").alias("bitset"))
+                 .localCheckpoint(eager=True))
+        total = int(added.get["n"])
         if total == 0:
             return 0
-        self._table = merged.select("pid", "bitset")
+        self._table = grown
         self.n_added += total
         return total
 
@@ -266,27 +231,28 @@ class PartitionedBloom:
         return out
 
     # -- probe ---------------------------------------------------------------
-    def _probe(self, spark: SparkSession, df: DataFrame, col: str,
-               flag: str) -> DataFrame:
-        """``probe_kernel`` over every pid: candidates shuffle by pid and
-        each task receives ONLY its own partition's bit array via cogroup
-        against the bitset TABLE — no driver or broadcast copy of the bit
-        matrix. At 10^10 keys (~12 GB of bits) each of the P partition
-        arrays travels exactly once, to the task that owns that url_hash
-        range. Rows with a null ``flag`` are the grown (``_pid``,
-        ``_bitset``) rows; every output column is nullable for them."""
+    def _probe(self, spark: SparkSession, hashed: DataFrame, cols: list[str],
+               flag: str | None) -> DataFrame:
+        """``probe_kernel`` over every pid of ``hashed`` (``cols`` plus the
+        ``_with_hashes`` columns): candidates shuffle by pid and each task
+        receives ONLY its own partition's bit array via cogroup against
+        the bitset TABLE — no driver or broadcast copy of the bit matrix.
+        At 10^10 keys (~12 GB of bits) each of the P partition arrays
+        travels exactly once, to the task that owns that url_hash range.
+        Rows with a null ``flag`` (every row, with ``flag=None``) are the
+        grown (``_pid``, ``_bitset``) rows; every output column is
+        nullable for them."""
         m, k = self.m, self.k
-        cols = df.columns
-        schema = T.StructType(
-            [T.StructField(f.name, f.dataType) for f in df.schema.fields] +
-            [T.StructField(flag, T.BooleanType()),
-             T.StructField("_pid", T.IntegerType()),
-             T.StructField("_bitset", T.BinaryType())])
+        fields = [T.StructField(c, hashed.schema[c].dataType) for c in cols]
+        if flag is not None:
+            fields.append(T.StructField(flag, T.BooleanType()))
+        schema = T.StructType(fields + [T.StructField("_pid", T.IntegerType()),
+                                        T.StructField("_bitset", T.BinaryType())])
 
         def kernel(cand: pd.DataFrame, bits_pdf: pd.DataFrame) -> pd.DataFrame:
             return probe_kernel(cand, bits_pdf, m, k, cols, flag)
 
-        return (self._with_hashes(df, col).groupBy("_pid")
+        return (hashed.groupBy("_pid")
                 .cogroup(self._table_or_empty(spark).groupBy("pid"))
                 .applyInPandas(kernel, schema=schema))
 
@@ -296,7 +262,7 @@ class PartitionedBloom:
         """Adds a boolean column: False ⇒ definitively never seen. The
         candidate rows of the one probe (``_probe``); the grown bits are
         dropped and the filter is left as it was."""
-        return (self._probe(spark, df, col, flag)
+        return (self._probe(spark, self._with_hashes(df, col), df.columns, flag)
                 .filter(F.col(flag).isNotNull()).drop("_pid", "_bitset"))
 
     def prefilter(self, spark: SparkSession, candidates: DataFrame,
@@ -335,7 +301,8 @@ class PartitionedBloom:
         the cycle's delta fold and absorbs right after (crawler.run_cycle)
         — external callers must do the same."""
         self.release()
-        flagged = self._probe(spark, candidates, col, "_maybe_seen").persist()
+        flagged = self._probe(spark, self._with_hashes(candidates, col),
+                              candidates.columns, "_maybe_seen").persist()
         self._last_flagged = flagged
         self._grown = (flagged.filter(F.col("_bitset").isNotNull())
                        .select(F.col("_pid").alias("pid"),
@@ -411,20 +378,16 @@ class PartitionedBloom:
 
     @classmethod
     def from_df(cls, df: DataFrame) -> "PartitionedBloom":
-        """Restore from a persisted snapshot table. Reads three scalar meta
+        """Restore from a persisted snapshot table. Reads four scalar meta
         columns (column-pruned — no bitset bytes cross the driver) and
         re-roots the bitset table on the parquet via localCheckpoint so a
         later snapshot GC can't pull the files out from under it."""
-        has_p = "p" in df.columns
-        meta = df.select("m", "k", "n_added", *(["p"] if has_p else [])).first()
+        meta = df.select("m", "k", "n_added", "p").first()
         obj = cls.__new__(cls)
         obj.m = int(meta["m"])
         obj.k = int(meta["k"])
         obj.n_added = int(meta["n_added"])
-        # a table written before ``p`` existed has no such column, or (read
-        # with SNAPSHOT_SCHEMA) a null one: one row per partition
-        p = meta["p"] if has_p else None
-        obj.P = int(p) if p is not None else int(df.count())
+        obj.P = int(meta["p"])
         obj._table = df.select("pid", "bitset").localCheckpoint(eager=True)
         obj._last_flagged = None
         obj._grown = None

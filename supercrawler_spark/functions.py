@@ -37,11 +37,6 @@ def murmur3(col) -> Column:
     return F.hash(col)
 
 
-def sha1_hex(col) -> Column:
-    """Reference urlHash parity — /root/reference/lib/DbUrlList.js:151."""
-    return F.sha1(col)
-
-
 def deterministic_priority(col) -> Column:
     """Uniform-[0,1) priority from sha1 prefix — the deterministic
     replacement for Math.random() at /root/reference/lib/DbUrlList.js:182.

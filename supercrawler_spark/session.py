@@ -43,13 +43,13 @@ def _warm_session(spark: SparkSession) -> None:
     codegen infrastructure, AQE and the noop sink; (2) a trivial pandas
     UDF pass over every core starts the Python daemon and forks the full
     worker pool (which inherits the numeric stack pre-imported by
-    pydaemon) and initializes Arrow serialization in both directions.
+    pydaemon) and initializes Arrow serialization in both directions; (3)
+    a string/hash/explode/self-join pass compiles more codegen shapes.
     Session construction is one-time init that belongs to the
     application, not to whichever query happens to run first — the same
-    principle as a benchmark's untimed warmup, applied at session scope. ~1 s once per session;
-    disable with SPARK_GRAFT_WARM=0 (e.g. for many-session test runs)."""
-    if os.environ.get("SPARK_GRAFT_WARM", "1") == "0":
-        return
+    principle as a benchmark's untimed warmup, applied at session scope.
+    ~1 s, once per session: the ``spark.supercrawler.warmed`` conf marks
+    a session already warmed."""
     if spark.conf.get("spark.supercrawler.warmed", None) == "1":
         return
     import pandas as pd

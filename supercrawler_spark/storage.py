@@ -151,10 +151,6 @@ class SnapshotStore:
             return None
         return _read(spark, manifest["tables"][name], schema)
 
-    def meta(self) -> dict:
-        manifest = self.read_manifest()
-        return manifest["meta"] if manifest else {}
-
 
 class AppendLog:
     """Append-only parquet log (crawl events / metrics — SURVEY.md S7/A5).

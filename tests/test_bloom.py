@@ -195,13 +195,13 @@ def test_add_never_ships_bitsets_to_driver(spark, url_sets):
     DataFrame.collect, DataFrame.toPandas = spy_collect, spy_topandas
     try:
         n = bloom.add(spark, seen)
-        bloom.add(spark, cand)  # second add exercises the OR-merge join
+        bloom.add(spark, cand)  # second add grows a non-empty table
         seen.limit(1).collect()  # proves the spy records collects
     finally:
         DataFrame.collect, DataFrame.toPandas = orig_collect, orig_topandas
     assert n == 20000
     # the spy saw only its own probe: add() collects nothing at all (its
-    # one scalar comes from an Observation on the merge job)
+    # one scalar comes from an Observation read by the checkpoint job)
     assert collected_schemas == [seen.schema]
     binary_fields = [
         (schema, f.name) for schema in collected_schemas
@@ -347,8 +347,7 @@ def test_empty_add_leaves_the_filter_as_it_was(spark, url_sets, tmp_path):
     """add() of an empty frame returns 0 and changes nothing: a filter
     that had no table still has none, a filled one keeps its table, and
     both still round-trip through to_df/from_df, including a parquet
-    read with the snapshot schema and a table from before the ``p``
-    column existed."""
+    read with the snapshot schema."""
     empty = spark.createDataFrame([], "url string")
     fresh = PartitionedBloom(partitions=4, capacity=1 << 10)
     assert fresh.add(spark, empty) == 0
@@ -368,20 +367,50 @@ def test_empty_add_leaves_the_filter_as_it_was(spark, url_sets, tmp_path):
         return sorted((r["pid"], bytes(r["bitset"])) for r in
                       f.to_df(spark).select("pid", "bitset").collect())
 
-    for name, df in (("current", bloom.to_df(spark)),
-                     ("legacy", bloom.to_df(spark).drop("p"))):
-        path = str(tmp_path / name)
-        df.write.parquet(path)
-        back = PartitionedBloom.from_df(
-            spark.read.schema(PartitionedBloom.SNAPSHOT_SCHEMA).parquet(path))
-        assert (back.P, back.m, back.k, back.n_added) == \
-            (bloom.P, bloom.m, bloom.k, bloom.n_added)
-        assert rows(back) == rows(bloom)
+    path = str(tmp_path / "bloom")
+    bloom.to_df(spark).write.parquet(path)
+    back = PartitionedBloom.from_df(
+        spark.read.schema(PartitionedBloom.SNAPSHOT_SCHEMA).parquet(path))
+    assert (back.P, back.m, back.k, back.n_added) == \
+        (bloom.P, bloom.m, bloom.k, bloom.n_added)
+    assert rows(back) == rows(bloom)
 
 
 def _table_rows(spark, bloom):
     return sorted((r["pid"], bytes(r["bitset"])) for r in
                   bloom.to_df(spark).select("pid", "bitset").collect())
+
+
+def test_add_equals_numpy_reference(spark, url_sets):
+    """``add`` through Spark builds the bits a numpy pass outside Spark
+    sets, byte for byte: each pid's row is zeros with the ``_positions``
+    of every key added so far set by ``_set_bits`` — after an add into an
+    empty filter, after one into a non-empty filter, and after an empty
+    frame, which adds nothing."""
+    seen, cand = url_sets
+    bloom = PartitionedBloom(partitions=8, capacity=1 << 16)
+    bits = np.zeros((bloom.P, bloom.m // 8), dtype=np.uint8)
+    pids = set()  # the table holds a row only for a pid that got a key
+
+    def reference(df):
+        hashed = bloom._with_hashes(df, "url").select(
+            "_h1", "_h2", "_pid").toPandas()
+        for pid, g in hashed.groupby("_pid"):
+            bloom_mod._set_bits(bits[pid], bloom_mod._positions(
+                g["_h1"].to_numpy(), g["_h2"].to_numpy(), bloom.m, bloom.k))
+            pids.add(int(pid))
+        return [(pid, bits[pid].tobytes()) for pid in sorted(pids)]
+
+    want = reference(seen)
+    assert bloom.add(spark, seen) == 20000
+    assert _table_rows(spark, bloom) == want and len(want) == bloom.P
+    want = reference(cand)  # 20k of its keys already in, 10k new
+    assert bloom.add(spark, cand) == 30000
+    assert _table_rows(spark, bloom) == want
+    table = bloom._table
+    assert bloom.add(spark, spark.createDataFrame([], "url string")) == 0
+    assert bloom._table is table and bloom.n_added == 50000
+    assert _table_rows(spark, bloom) == want
 
 
 def test_absorbing_crawl_equals_bulk_add_of_the_frontier(spark):
@@ -467,7 +496,8 @@ def test_probe_kernel_equals_numpy_reference():
     every candidate's ``_positions`` set — for a pid with bits and
     candidates, one with bits but no candidates (re-emitted unchanged) and
     one with candidates but no bits (grown from zeros). Candidate columns
-    pass through exactly."""
+    pass through exactly. Without a flag (the bulk add) the grown row is
+    the whole output."""
     m, k = 4096, 7
     rng = np.random.default_rng(5)
 
@@ -506,6 +536,10 @@ def test_probe_kernel_equals_numpy_reference():
         assert rows["url"].tolist() == cand["url"].tolist(), name
         assert rows["big"].astype("int64").tolist() == \
             cand["big"].tolist(), name
+        bits_only = bloom_mod.probe_kernel(cand, bits, m, k, [], None)
+        assert bits_only.columns.tolist() == ["_pid", "_bitset"], name
+        assert bits_only["_pid"].tolist() == [pid], name
+        assert bits_only["_bitset"].tolist() == [want_bits], name
     got = flags["bits and candidates"]
     assert got[:100].all() and not got.all()
     assert not flags["candidates, no bits"].any()

@@ -241,6 +241,35 @@ def test_distributed_seq_assignment_parity(spark, small_web, monkeypatch):
     assert results[0][2] == results[1][2]  # identical dense seqs
 
 
+def test_assign_dense_seq_equals_flat_window(spark):
+    """``assign_dense_seq`` on 20k links of 20 sitemap-sized pages: every
+    url gets the seq a flat single-partition ``row_number`` window gives
+    it in the same order, and no partition of the result holds every row
+    (the scheme has no single-task stage)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    n, start = 20_000, 999
+    order = ["batch_idx", "source_order", "link_idx"]
+    links = spark.range(n).select(
+        (F.col("id") / (n // 20)).cast("long").alias("batch_idx"),
+        F.lit(1).alias("source_order"),
+        (F.col("id") % (n // 20)).alias("link_idx"),
+        F.concat(F.lit("http://h"), F.col("id") % 499,
+                 F.lit(".example/p"), F.col("id")).alias("url")
+    ).repartition(8)
+    dist, count = crawler_mod.assign_dense_seq(spark, links, order, start)
+    flat = links.select("url", (F.lit(start) + F.row_number().over(
+        Window.partitionBy(F.lit(0)).orderBy(*order))).alias("seq"))
+    got = {r["url"]: r["seq"] for r in dist.select("url", "seq").collect()}
+    want = {r["url"]: r["seq"] for r in flat.collect()}
+    assert count == len(got) == n
+    assert got == want
+    sizes = [r["n"] for r in dist.groupBy(F.spark_partition_id())
+             .agg(F.count(F.lit(1)).alias("n")).collect()]
+    assert sum(sizes) == n and max(sizes) < n, sizes
+
+
 def test_decay_resume_and_table_carried_host_state(spark, small_web):
     """Decay (RedisUrlList) mode: per-host delay state survives kill/resume
     via the snapshot host_delay TABLE, the manifest JSON carries no

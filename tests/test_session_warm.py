@@ -130,13 +130,6 @@ def test_pandas_udf_through_warmed_pool(spark):
     assert out == 2 * sum(range(100))
 
 
-def test_warm_session_disabled_by_env(monkeypatch):
-    # SPARK_GRAFT_WARM=0 must short-circuit before touching the session
-    from supercrawler_spark.session import _warm_session
-    monkeypatch.setenv("SPARK_GRAFT_WARM", "0")
-    _warm_session(None)  # would raise if it touched the (None) session
-
-
 def test_default_driver_memory_fits_the_host(monkeypatch):
     """Without SPARK_DRIVER_MEM the JVM heap is a quarter of physical
     RAM, clamped to 1-8 GiB, so a small host never grants the JVM more
